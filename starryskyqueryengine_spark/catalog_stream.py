@@ -730,12 +730,12 @@ def _write_sentinels_pyarrow(stage: str, src_path: str, sentinel_id: int) -> boo
         logging.getLogger(__name__).warning(
             "pyarrow sentinel fast path failed, falling back to Spark: %r", exc
         )
-        try:
-            for tgt in written:
+        for tgt in written:
+            try:
                 if _os.path.exists(tgt):
                     _os.remove(tgt)
-        except OSError:
-            pass
+            except OSError:
+                pass  # one failed remove must not skip the rest
         return False
 
 

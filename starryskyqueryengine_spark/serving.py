@@ -4,9 +4,11 @@ Read path of the reference (``src/algos/starrysky.ts:10-84``,
 ``src/methods/feed-generation.ts``, ``src/methods/describe-generator.ts``):
 conditions lookup by recordName -> private-feed ACL -> pinned prepend
 (first page) -> keyset-predicate top-k -> skeleton projection + next
-cursor. Everything per-request is a tiny driver-side plan over the
-key-pruned store partition; the heavy lifting (TakeOrderedAndProject)
-stays distributed.
+cursor. Everything per-request is a tiny driver-side plan over one
+key's store partition: the read lists and scans only that key's
+directory, with the schema given rather than inferred, so a request
+runs one Spark job whatever the number of keys in the store; the heavy
+lifting (TakeOrderedAndProject) stays distributed.
 """
 
 from __future__ import annotations
@@ -58,7 +60,9 @@ class FeedServer:
         if cond.privateFeed and (requester_did not in cond.privateFeed):
             return FeedPage(feed=[], cursor=None)
 
-        page_df = keyset_page(self.store.read(), cond.key, limit, cursor)
+        page_df = keyset_page(
+            self.store.read(keys=[cond.key]), cond.key, limit, cursor
+        )
         rows = page_df.select("uri", "cid", F.unix_micros("indexedAt").alias("us")).collect()
 
         feed: list[dict] = []
@@ -107,7 +111,9 @@ class FeedServer:
         cond = self.registry.by_record_name(record_name)
         if cond is None:
             raise UnknownFeedError(record_name)
-        page = keyset_page(self.store.read(), cond.key, limit, cursor)
+        page = keyset_page(
+            self.store.read(keys=[cond.key]), cond.key, limit, cursor
+        )
         pinned = cond.pinnedPost if cursor is None else []
         return prepend_pinned(self.spark, page, pinned)
 

@@ -119,6 +119,9 @@ def _read_fixture(spark: SparkSession, path: str) -> DataFrame:
     if cache is not None:
         df = cache.get(("raw", key))
         if df is not None:
+            # the schema catalog may have been cleared while the plan memo
+            # survived: refill it so fixture_schema never re-infers
+            _SCHEMA_CACHE.setdefault(key, df.schema)
             return df
     cached = _SCHEMA_CACHE.get(key) if key is not None else None
     if cached is not None:

@@ -48,12 +48,13 @@ class PostStore:
     def exists(self) -> bool:
         return self.fmt.exists()
 
-    def read(self) -> DataFrame:
-        return self.fmt.read(self.spark)
+    def read(self, keys: list[str] | None = None) -> DataFrame:
+        """The stored rows, or only those of ``keys``: a keyed read lists
+        and scans just those keys' partitions (the format's contract)."""
+        return self.fmt.read(self.spark, keys=keys)
 
     def read_key(self, key: str) -> DataFrame:
-        # equality filter on the partition column -> partition pruning
-        return self.read().filter(F.col("key") == key)
+        return self.read(keys=[key])
 
     def stored_uris(self, key: str) -> DataFrame:
         """J2 build side (src/subscription.ts:172-178): URI set for a key,
@@ -117,7 +118,7 @@ class PostStore:
                 keys = [r["key"] for r in deduped.select("key").distinct().collect()]
                 if not keys:
                     return {}
-                stored = self.read().filter(F.col("key").isin(keys))
+                stored = self.read(keys=keys)
                 batch = new_rows_anti_join(deduped, stored, ["uri", "key"]).cache()
             inserted = {
                 r["key"]: r["n"]
@@ -149,7 +150,9 @@ class PostStore:
         limits = self.spark.createDataFrame(
             list(limit_by_key.items()), "key string, _cap int"
         )
-        stored = self.read().join(F.broadcast(limits), "key", "inner")
+        stored = self.read(keys=list(limit_by_key)).join(
+            F.broadcast(limits), "key", "inner"
+        )
         over = (
             stored.groupBy("key", "_cap")
             .count()
@@ -191,8 +194,7 @@ class PostStore:
         keys = [r["key"] for r in doomed.select("key").distinct().collect()]
         if not keys:
             return
-        affected = self.read().filter(F.col("key").isin(keys))
-        remaining = affected.join(doomed, ["uri", "key"], "left_anti")
+        remaining = self.read(keys=keys).join(doomed, ["uri", "key"], "left_anti")
         self._overwrite_keys(remaining, expected_keys=keys)
 
     def file_counts(self) -> dict[str, int]:
@@ -211,7 +213,7 @@ class PostStore:
         ]
         if not fragmented:
             return []
-        affected = self.read().filter(F.col("key").isin(fragmented))
+        affected = self.read(keys=fragmented)
         # hash-repartition by key -> one writer task (one file) per key;
         # a pathologically hot key would add a salt column here to split
         # output into size-targeted files. Rows are written newest-first

@@ -87,8 +87,17 @@ class TableFormat:
     def exists(self) -> bool:
         raise NotImplementedError
 
-    def read(self, spark: SparkSession) -> DataFrame:
-        """Full-table scan in canonical column order (empty DF if absent)."""
+    def read(
+        self, spark: SparkSession, keys: list[str] | None = None
+    ) -> DataFrame:
+        """Table scan in canonical column order (empty DF if absent).
+
+        ``keys=None`` reads every partition. A list of RAW feed keys
+        reads exactly those keys' rows, and an implementation must list
+        and open only their partitions: serving reads one key per
+        request, so anything it does per key of the whole table is paid
+        on every request. A key with no partition contributes no rows;
+        if none has one, the result is the empty table."""
         raise NotImplementedError
 
     def append(self, df: DataFrame) -> None:
@@ -146,11 +155,30 @@ class ParquetPartitionedFormat(TableFormat):
             not n.startswith(("_", ".")) for n in os.listdir(self.path)
         )
 
-    def read(self, spark: SparkSession) -> DataFrame:
-        if not self.exists():
+    def read(
+        self, spark: SparkSession, keys: list[str] | None = None
+    ) -> DataFrame:
+        # The schema is given, never inferred: inference costs a footer
+        # read per call, and partition-type inference would turn a key
+        # such as "007" into the int 7. A keyed read lists only the
+        # named key directories, so its cost does not grow with the
+        # number of keys in the store.
+        if keys is None:
+            paths = [self.path] if self.exists() else []
+        else:
+            dirs = (
+                os.path.join(self.path, f"key={escape_partition_value(k)}")
+                for k in dict.fromkeys(keys)
+            )
+            paths = [d for d in dirs if os.path.isdir(d)]
+        if not paths:
             return spark.createDataFrame([], POST_SCHEMA)
-        # partition column comes back typed; keep canonical column order
-        return spark.read.parquet(self.path).select(_COLS)
+        return (
+            spark.read.schema(POST_SCHEMA)
+            .option("basePath", self.path)
+            .parquet(*paths)
+            .select(_COLS)
+        )
 
     def append(self, df: DataFrame) -> None:
         df.select(_COLS).write.mode("append").partitionBy("key").parquet(self.path)
@@ -1028,9 +1056,18 @@ class TxnLogFormat(TableFormat):
     def exists(self) -> bool:
         return bool(self._versions())
 
-    def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
+    def read(
+        self,
+        spark: SparkSession,
+        version: int | None = None,
+        keys: list[str] | None = None,
+    ) -> DataFrame:
         schema = self.table_schema(version)
         live = self._snapshot(version)
+        if keys is not None:
+            # the log's key fields are in the ESCAPED (on-disk) form
+            wanted = {escape_partition_value(k) for k in keys}
+            live = {p: k for p, k in live.items() if k in wanted}
         if not live:
             return spark.createDataFrame([], schema)
         paths = [os.path.join(self.data_path, p) for p in sorted(live)]

@@ -26,8 +26,8 @@ class RecordingFormat(TableFormat):
     def exists(self):
         return self.inner.exists()
 
-    def read(self, spark):
-        return self.inner.read(spark)
+    def read(self, spark, keys=None):
+        return self.inner.read(spark, keys=keys)
 
     def append(self, df):
         self.calls.append("append")
@@ -570,7 +570,7 @@ def test_poststore_txn_feature_detect_is_static(spark, tmp_path):
         def exists(self):
             return False
 
-        def read(self, spark):
+        def read(self, spark, keys=None):
             raise AssertionError("not read in this test")
 
         def append(self, df, txn=None):
