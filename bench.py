@@ -25,18 +25,26 @@ def run_df(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def resolve_round(rounds: list, env_round: str | None) -> tuple:
+def resolve_round(
+    rounds: list, env_round: str | None, reduced: bool = False
+) -> tuple:
     """(current, previous) bench round.  $SPARK_GRAFT_ROUND pins the
     current round explicitly (ADVICE r13: the max(BENCH_r*)+1 inference
     mislabels a re-lap run after the driver has written this round's
     BENCH file); the previous round for ratio purposes is then simply
-    current-1.  Without the pin, falls back to the inference."""
+    current-1.  Without the pin, a main run is round max+1.  A
+    ``reduced``-core run (archived with a ``_c{cpus}`` suffix) is an
+    extra pass over a round whose main BENCH file is already written,
+    so it takes the newest main round, not max+1."""
     if env_round:
         cur = int(env_round)
-        return cur, (cur - 1 if cur > 0 else None)
-    if rounds:
+    elif not rounds:
+        return 0, None
+    elif not reduced:
         return rounds[-1] + 1, rounds[-1]
-    return 0, None
+    else:
+        cur = rounds[-1]
+    return cur, (cur - 1 if cur > 0 else None)
 
 
 def shape_of(name: str, med: float, python_queries: set) -> str:
@@ -259,7 +267,14 @@ def main() -> None:
     # would shift the round by one, archiving under the wrong round and
     # mislabeling the next round's baseline.  $SPARK_GRAFT_ROUND pins it.
     env_round = os.environ.get("SPARK_GRAFT_ROUND")
-    cur_round, prev_round = resolve_round(rounds, env_round)
+    # A reduced-core scaling run (driver's low-cpu pass) must never claim
+    # the round's main archive slot: r14's 8-core pass ran after the
+    # driver wrote BENCH_r14.json, inferred round 15, and archived 8-core
+    # numbers as bench_full_r15.json.  Suffix the archive with the core
+    # count whenever it differs from the machine's full count, and label
+    # it with the main round it ran after.
+    cpu_tag = "" if cpus == (os.cpu_count() or cpus) else f"_c{cpus}"
+    cur_round, prev_round = resolve_round(rounds, env_round, bool(cpu_tag))
     full_path = os.path.join(here, "bench_full.json")
     prev_arch = (
         os.path.join(here, f"bench_full_r{prev_round:02d}.json")
@@ -557,12 +572,6 @@ def main() -> None:
     # after the driver's BENCH write shifted the inference — overwriting
     # would mislabel the round the next normalization compares against.
     # Only an explicit env-pinned round may overwrite its own archive.
-    # A reduced-core scaling run (driver's low-cpu pass) must never claim
-    # the round's main archive slot: r14's 8-core pass ran after the
-    # driver wrote BENCH_r14.json, inferred round 15, and archived 8-core
-    # numbers as bench_full_r15.json.  Suffix the archive with the core
-    # count whenever it differs from the machine's full count.
-    cpu_tag = "" if cpus == (os.cpu_count() or cpus) else f"_c{cpus}"
     arch_path = os.path.join(here, f"bench_full_r{cur_round:02d}{cpu_tag}.json")
     if os.path.exists(arch_path) and not env_round:
         print(

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from .catalog import register
 from .operators.rangejoin import interval_count_join
 from .session import scoped_shuffle_partitions
-from .sources.fixtures import load_table
+from .sources.fixtures import artifact_dir, assert_owned, load_table
 
 #: iterative graph rounds churn node-sized tables; size their shuffles
 #: to the working set, not the input (scoped, restored on exit).
@@ -1255,49 +1255,17 @@ def zorder_skipping_scan(spark, sf_dir):
     box (~5 of 16 at sf0.01; a linear sort layout prunes zero files for
     the second dimension — tests/test_zorder.py proves both). The
     oracle computes the same aggregate over the raw table: skipping
-    must be invisible to results. Layout build is cached per sf_dir
-    (build-once/serve-many, same lifecycle as the IVF index)."""
-    import hashlib
+    must be invisible to results. Layout build is cached per dataset
+    (build-once/serve-many) in a per-uid, ownership-gated artifact dir."""
     import os
-    import tempfile
 
     from .operators.zorder import MANIFEST, read_with_skipping, write_zordered
 
-    # tag carries a dataset fingerprint (mtime+size of the source
-    # parquet), not just the path: a regenerated fixture under the same
-    # path invalidates the cached layout instead of silently serving
-    # stale files (same pattern as the IVF centroid cache key)
-    src = os.path.join(str(sf_dir), "lineitem.parquet")
-    try:
-        st = os.stat(src)
-        fp = f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        fp = "nofp"
-    tag = hashlib.md5(f"{sf_dir}|{fp}".encode()).hexdigest()[:12]
-    # per-UID cache path + ownership check: the temp dir is shared and
-    # world-writable, so a predictable path trusted on mere manifest
-    # existence would let any local process pre-plant a crafted manifest
-    # and have its rows silently served as lineitem data (and two users
-    # benching the same fixture would collide on ownership).  The uid in
-    # the name partitions users; the stat check refuses to read a cache
-    # dir this uid does not own.
-    uid = os.getuid() if hasattr(os, "getuid") else 0
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"starrysky_zorder_u{uid}_{tag}"
-    )
-    # ownership gate covers BOTH paths: a pre-existing dir this uid does
-    # not own is never trusted as a cache AND never written into (a
-    # pre-planted world-writable dir would let its owner swap the files
-    # between our write and our read)
-    if os.path.exists(zpath):
-        st_dir = os.stat(zpath)
-        if getattr(st_dir, "st_uid", uid) != uid:
-            raise PermissionError(
-                f"zorder cache dir {zpath} is owned by uid "
-                f"{st_dir.st_uid}, not {uid} — refusing to use it"
-            )
-    cached = os.path.exists(os.path.join(zpath, MANIFEST))
-    if not cached:
+    zpath = artifact_dir("zorder", sf_dir, "lineitem")
+    # trust point: MANIFEST is what makes us serve the layout's files, so
+    # a directory planted after artifact_dir ran is refused here too
+    assert_owned(zpath)
+    if not os.path.exists(os.path.join(zpath, MANIFEST)):
         write_zordered(
             load_table(spark, sf_dir, "lineitem"),
             zpath,

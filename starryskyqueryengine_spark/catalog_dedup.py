@@ -213,9 +213,9 @@ def cross_source_dup_matrix(spark, sf_dir):
     which is near-dup-sized, not corpus-sized; final agg is |sources|²
     rows at most."""
     docs = load_table(spark, sf_dir, "documents")
-    sigs = dd.minhash_signatures(docs)
+    sh, sigs = dd.minhash_signatures(docs)
     cands = dd.lsh_candidate_pairs(sigs)
-    ver = dd.jaccard_verify(cands, sigs).filter(
+    ver = dd.jaccard_verify(cands, sh).filter(
         F.col("jaccard") >= MINHASH_VERIFY_THRESHOLD
     )
     src = docs.select("doc_id", "source")
@@ -254,9 +254,9 @@ def dedup_minhash_lsh(spark, sf_dir):
     equi-join -> exact-Jaccard verify on candidates only. The scale path:
     no quadratic pair space, one shuffle on the band bucket key."""
     docs = load_table(spark, sf_dir, "documents")
-    sigs = dd.minhash_signatures(docs)
+    sh, sigs = dd.minhash_signatures(docs)
     cands = dd.lsh_candidate_pairs(sigs)
-    verified = dd.jaccard_verify(cands, sigs)
+    verified = dd.jaccard_verify(cands, sh)
     return verified.filter(F.col("jaccard") >= MINHASH_VERIFY_THRESHOLD).select(
         "id_a", "id_b", "jaccard"
     )
@@ -305,9 +305,9 @@ def dedup_survivors(spark, sf_dir):
     recursive-CTE transitive closure standing in for the CC fixpoint —
     the whole dedup path is value-checked end to end."""
     docs = load_table(spark, sf_dir, "documents")
-    sigs = dd.minhash_signatures(docs)
+    sh, sigs = dd.minhash_signatures(docs)
     cands = dd.lsh_candidate_pairs(sigs)
-    verified = dd.jaccard_verify(cands, sigs).filter(
+    verified = dd.jaccard_verify(cands, sh).filter(
         F.col("jaccard") >= MINHASH_VERIFY_THRESHOLD
     )
     return dd.dedup_survivors(docs, verified).orderBy("doc_id")

@@ -1360,8 +1360,8 @@ def pipeline_rag_retrieval(spark, sf_dir):
     scan; both legs cut to RAG_LEG_K via TakeOrderedAndProject, so the
     fusion (windows + full-outer join) touches at most 2*K rows. This
     is the plan a sparse+dense retrieval stack runs per query batch —
-    with the persisted BM25 index and the IVF probe swapped in for the
-    scan-time legs at serving scale.
+    with the persisted BM25 index (bm25_indexed_search) and the IVF
+    probe swapped in for the scan-time legs at serving scale.
 
     Built as ONE generated Spark-SQL text (optimization r15, verdict r14
     ask #4): the DataFrame form cost ~2,500 py4j round trips (~1.0 s of
@@ -1384,7 +1384,7 @@ def pipeline_rag_retrieval(spark, sf_dir):
 
 
 def _rag_sql() -> str:
-    from .catalog_text import BM25_B, BM25_K1, BM25_QUERY_TERMS, _vec_sql_parts
+    from .catalog_text import BM25_PART_SQL, BM25_QUERY_TERMS, _vec_sql_parts
 
     terms = ", ".join(f"('{t}')" for t in BM25_QUERY_TERMS)
     v = _vec_sql_parts()
@@ -1430,9 +1430,7 @@ def _rag_sql() -> str:
     dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
     part AS (
       SELECT /*+ BROADCAST(dfq), BROADCAST(stats) */ tf.doc_id, tf.chunk_id,
-             ln(1 + (n_docs - df + 0.5D) / (df + 0.5D)) * tf * {BM25_K1 + 1!r}D
-               / (tf + {BM25_K1!r}D * ({1 - BM25_B!r}D + {BM25_B!r}D * dl / avgdl))
-               AS part
+             {BM25_PART_SQL} AS part
       FROM tf JOIN dfq ON tf.term = dfq.term
               JOIN dl ON tf.doc_id = dl.doc_id AND tf.chunk_id = dl.chunk_id
               CROSS JOIN stats

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from .catalog import register
 from .functions import similarity as sim
-from .sources.fixtures import load_table
+from .sources.fixtures import load_table, table_fingerprint
 
 ANN_K = 10
 ANN_NUM_QUERIES = 5  # vec_id < 5 are the query vectors
@@ -75,15 +75,8 @@ _IVF_CENTROIDS: dict[tuple, object] = {}
 
 
 def _ivf_cache_key(sf_dir) -> tuple:
-    import os
-
-    path = os.path.join(str(sf_dir), "embeddings.parquet")
-    try:
-        st = os.stat(path)
-        fp = (int(st.st_mtime_ns), st.st_size)
-    except OSError:  # non-local path (e.g. object store): path-only key
-        fp = None
-    return (str(sf_dir), fp)
+    # a non-local path (e.g. object store) has no fingerprint: path-only key
+    return (str(sf_dir), table_fingerprint(sf_dir, "embeddings"))
 
 
 @register("ann_ivf_topk", None)  # oracle attached below (needs IVF_* consts)

@@ -11,7 +11,18 @@ from pyspark.sql import functions as F
 from .catalog import register
 from .catalog_dedup import _sql_md5int
 from .functions import text as tx
-from .sources.fixtures import load_table
+from .functions.retrieval import (
+    BM25_B,
+    BM25_K1,
+    BM25_PART_SQL,
+    Bm25IncrementalIndex,
+)
+from .sources.fixtures import (
+    artifact_dir,
+    assert_owned,
+    load_table,
+    table_fingerprint,
+)
 
 _QUALITY_PAT = r"\b(" + "|".join(tx.QUALITY_STOPWORDS) + r")\b"
 
@@ -684,8 +695,6 @@ def contrastive_negatives(spark, sf_dir):
     return pairs.join(neg, "neg_id").select("anchor_id", "j", "neg_id", "neg_lang")
 
 
-BM25_K1 = 1.2
-BM25_B = 0.75
 BM25_TOP_K = 20
 BM25_QUERY_TERMS = ("vector", "spark", "stream")
 
@@ -760,22 +769,7 @@ def _bm25_doc_scores(spark, sf_dir):
         tf.join(F.broadcast(df), "term")
         .join(dl, "doc_id")
         .join(F.broadcast(stats))
-        .select(
-            "doc_id",
-            (
-                F.log(
-                    F.lit(1)
-                    + (F.col("n_docs") - F.col("df") + F.lit(0.5))
-                    / (F.col("df") + F.lit(0.5))
-                )
-                * F.col("tf") * F.lit(BM25_K1 + 1)
-                / (
-                    F.col("tf")
-                    + F.lit(BM25_K1)
-                    * (F.lit(1 - BM25_B) + F.lit(BM25_B) * F.col("dl") / F.col("avgdl"))
-                )
-            ).alias("part"),
-        )
+        .select("doc_id", F.expr(BM25_PART_SQL).alias("part"))
     )
     return part.groupBy("doc_id").agg(F.round(F.sum("part"), 6).alias("score"))
 
@@ -942,9 +936,7 @@ def _hybrid_sql() -> str:
     dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
     part AS (
       SELECT /*+ BROADCAST(dfq), BROADCAST(stats) */ tf.doc_id,
-             ln(1 + (n_docs - df + 0.5D) / (df + 0.5D)) * tf * {BM25_K1 + 1!r}D
-               / (tf + {BM25_K1!r}D * ({1 - BM25_B!r}D + {BM25_B!r}D * dl / avgdl))
-               AS part
+             {BM25_PART_SQL} AS part
       FROM tf JOIN dfq ON tf.term = dfq.term
               JOIN dl ON tf.doc_id = dl.doc_id
               CROSS JOIN stats
@@ -1037,179 +1029,27 @@ def leakage_safe_split(spark, sf_dir):
     )
 
 
-BM25_INDEX_BUCKETS = 64
-
-
-def _bm25_index_path(sf_dir) -> str:
-    import hashlib
-    import os
-    import tempfile
-
-    # dataset-fingerprinted tag (mtime+size of the source parquet): a
-    # regenerated fixture invalidates the index instead of serving stale
-    # postings — same pattern as the IVF centroid cache key
-    src = os.path.join(str(sf_dir), "documents.parquet")
-    try:
-        st = os.stat(src)
-        fp = f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        fp = "nofp"
-    tag = hashlib.md5(f"{sf_dir}|{fp}".encode()).hexdigest()[:12]
-    # per-UID path + ownership gate (review r13, closing the gap with
-    # the zorder layout cache which got this in r8): the temp dir is
-    # shared and world-writable, so a predictable path trusted on mere
-    # stats.json existence would let any local process pre-plant a
-    # crafted index and have its postings served as query results (and
-    # two users benching the same fixture would collide on ownership).
-    uid = os.getuid() if hasattr(os, "getuid") else 0
-    path = os.path.join(
-        tempfile.gettempdir(), f"starrysky_bm25idx_u{uid}_{tag}"
-    )
-    _assert_owned(path)
-    return path
-
-
-def _assert_owned(path: str) -> None:
-    """Refuse a cache dir owned by another uid.  stat() directly and
-    treat FileNotFoundError as fine (ADVICE r13: the exists()+stat()
-    pair had a TOCTOU window where the dir vanishing between the two
-    raised an unhandled FileNotFoundError; a not-yet-created dir is the
-    normal build-fresh case, not an error).  Callers re-invoke this at
-    each TRUST point (just before believing stats.json means a complete
-    index), not only at path computation, so a dir planted after the
-    path gate is still caught."""
-    import os
-
-    uid = os.getuid() if hasattr(os, "getuid") else 0
-    try:
-        st_dir = os.stat(path)
-    except FileNotFoundError:
-        return
-    if getattr(st_dir, "st_uid", uid) != uid:
-        raise PermissionError(
-            f"bm25 index cache dir {path} is owned by uid "
-            f"{st_dir.st_uid}, not {uid} — refusing to use it"
-        )
-
-
-def build_bm25_index(spark, sf_dir) -> str:
-    """Build the persisted inverted index once per dataset: posting
-    lists (term, doc_id, tf) laid out partitioned by a 64-way term hash
-    bucket — a query probe prunes to the buckets its terms hash into,
-    reading a bounded fraction of the index regardless of corpus size —
-    plus the per-doc length table and a (n_docs, avgdl) stats sidecar.
-    This is the build-once/serve-many lifecycle the IVF index and the
-    Z-order layout already follow; at 100 TB the index build is the
-    one-time tokenization cost the scan-time bm25_search pays per query."""
-    import json
-    import os
-
-    path = _bm25_index_path(sf_dir)
-    # re-verify ownership at the trust point (ADVICE r13): stats.json
-    # existence is what makes us SERVE the index, so the gate must run
-    # here too — a dir planted between path computation and this check
-    # would otherwise have its postings served as query results
-    _assert_owned(path)
-    if os.path.exists(os.path.join(path, "stats.json")):
-        return path
-    docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
-        ).alias("term"),
-    )
-    tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    postings = tf.withColumn(
-        "term_bucket", F.abs(F.hash("term")) % BM25_INDEX_BUCKETS
-    )
-    (
-        postings.repartition("term_bucket")
-        .write.mode("overwrite")
-        .partitionBy("term_bucket")
-        .parquet(os.path.join(path, "postings"))
-    )
-    dl = tok.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    dl.write.mode("overwrite").parquet(os.path.join(path, "dl"))
-    row = dl.agg(F.avg("dl").alias("avgdl"), F.count("*").alias("n_docs")).collect()[0]
-    tmp = os.path.join(path, "stats.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump({"avgdl": row["avgdl"], "n_docs": row["n_docs"]}, f)
-    os.replace(tmp, os.path.join(path, "stats.json"))
-    return path
-
-
-def bm25_probe(spark, index_path: str, terms) -> "F.DataFrame":
-    """Serve a BM25 query from the persisted index: posting scan pruned
-    to the query terms' hash buckets (PartitionFilters on term_bucket —
-    plan-pinned), df computed from the probe result itself, dl joined
-    only for candidate docs. No tokenization, no corpus-wide aggregate
-    at query time."""
-    import json
-    import os
-
-    with open(os.path.join(index_path, "stats.json")) as f:
-        stats = json.load(f)
-    # ONE local relation serves both the bucket probe and the term join
-    # (optimization r14: createDataFrame is ~0.1s of py4j/driver work per
-    # call — the second identical relation bought nothing)
-    qt = spark.createDataFrame([(t,) for t in terms], "term string")
-    buckets = sorted(
-        {r["b"] for r in qt
-         .select((F.abs(F.hash("term")) % BM25_INDEX_BUCKETS).alias("b"))
-         .collect()}
-    )
-    postings = (
-        spark.read.parquet(os.path.join(index_path, "postings"))
-        .filter(F.col("term_bucket").isin(buckets))
-        .join(F.broadcast(qt), "term")
-    )
-    df_t = postings.groupBy("term").agg(F.count("*").alias("df"))
-    dl = spark.read.parquet(os.path.join(index_path, "dl"))
-    part = (
-        postings.join(F.broadcast(df_t), "term")
-        .join(dl, "doc_id")
-        .select(
-            "doc_id",
-            (
-                F.log(
-                    F.lit(1)
-                    + (F.lit(stats["n_docs"]) - F.col("df") + F.lit(0.5))
-                    / (F.col("df") + F.lit(0.5))
-                )
-                * F.col("tf") * F.lit(BM25_K1 + 1)
-                / (
-                    F.col("tf")
-                    + F.lit(BM25_K1)
-                    * (F.lit(1 - BM25_B)
-                       + F.lit(BM25_B) * F.col("dl") / F.lit(stats["avgdl"]))
-                )
-            ).alias("part"),
-        )
-    )
-    return (
-        part.groupBy("doc_id")
-        .agg(F.round(F.sum("part"), 6).alias("score"))
-        .orderBy(F.col("score").desc(), "doc_id")
-        .limit(BM25_TOP_K)
-        .select("doc_id", "score")
-    )
-
-
 @register("bm25_indexed_search", _bm25_oracle())
 def bm25_indexed_search(spark, sf_dir):
-    """BM25 served from the PERSISTED inverted index (same oracle as
+    """BM25 served from the persisted inverted index
+    (functions/retrieval.Bm25IncrementalIndex; same oracle as
     bm25_search — identical results, different physical plan): the
     postings scan carries PartitionFilters on the query terms' hash
     buckets, so query-time work is O(postings of matched buckets), not
-    O(corpus). df/avgdl/n_docs come from the probe and the stats
-    sidecar; the only corpus-sized artifact read is the pruned posting
-    fraction plus the doc-length join. Build-once/serve-many: the index
-    is written on first use per dataset (one tokenization pass), every
-    later query skips straight to the probe — the Lucene-shaped answer
-    to bm25_search's scan-time plan."""
-    path = build_bm25_index(spark, sf_dir)
-    return bm25_probe(spark, path, BM25_QUERY_TERMS)
+    O(corpus), and no text is tokenized.  On first use per dataset the
+    corpus is indexed as generation 0; every later query skips straight
+    to the probe, and a living corpus would keep the same index current
+    with ``apply_changes`` instead of rebuilding it."""
+    import os
+
+    path = artifact_dir("bm25inc", sf_dir, "documents")
+    idx = Bm25IncrementalIndex(spark, path)
+    # trust point: stats.json is what makes us serve the postings, so a
+    # directory planted after artifact_dir ran is refused here too
+    assert_owned(path)
+    if not os.path.exists(os.path.join(path, "stats.json")):
+        idx.build(load_table(spark, sf_dir, "documents"))
+    return idx.probe(BM25_QUERY_TERMS, BM25_TOP_K)
 
 
 _BPE_MERGES_CACHE: dict = {}
@@ -1218,23 +1058,15 @@ BPE_N_MERGES = 256
 
 
 def _bpe_merges_for(spark, sf_dir):
-    """Train-once-per-dataset BPE merge table (same lifecycle as the
-    IVF centroids / BM25 index): deterministic bounded sample — the
-    first BPE_TRAIN_DOCS docs by doc_id — trained driver-side. Keyed on
-    (sf_dir, dataset fingerprint) like the BM25 index / IVF centroid
-    caches: a regenerated documents.parquet under the same path trains
-    fresh merges instead of serving the old corpus's table."""
-    import os
-
+    """Train-once-per-dataset BPE merge table (build once, serve many,
+    like the IVF centroids): deterministic bounded sample — the first
+    BPE_TRAIN_DOCS docs by doc_id — trained driver-side. Keyed on
+    (sf_dir, table fingerprint) like every fixture-derived artifact: a
+    regenerated documents.parquet under the same path trains fresh
+    merges instead of serving the old corpus's table."""
     from .functions.bpe import train_bpe
 
-    src = os.path.join(str(sf_dir), "documents.parquet")
-    try:
-        st = os.stat(src)
-        fp = f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        fp = "nofp"
-    key = f"{sf_dir}|{fp}"
+    key = (str(sf_dir), table_fingerprint(sf_dir, "documents"))
     if key not in _BPE_MERGES_CACHE:
         sample = [
             r["text"] or ""

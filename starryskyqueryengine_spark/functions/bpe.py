@@ -14,8 +14,9 @@ Scale split (the standard practice for 100 TB corpora):
 
 - TRAIN is a one-time job over a bounded sample — vocabulary quality
   saturates long before corpus size does, so the sample is collected
-  with a deterministic cap and trained driver-side (the same lifecycle
-  as the IVF centroids and the BM25 index: build once, serve many).
+  with a deterministic cap and trained driver-side (build once, serve
+  many, like the IVF centroids; the BM25 index that bm25_indexed_search
+  serves is instead maintained incrementally).
 - ENCODE is the hot path: a broadcast merge table + Arrow-batched
   ``mapInPandas`` over the corpus — pure data parallelism, per-task
   memory is one batch, no shuffle.

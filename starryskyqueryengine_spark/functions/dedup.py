@@ -101,8 +101,12 @@ def minhash_signatures(
     text_col: str = "text",
     id_col: str = "doc_id",
     caches: list | None = None,
-) -> DataFrame:
-    """(id, shingles, sig) for docs with at least one shingle.
+) -> tuple[DataFrame, DataFrame]:
+    """``(shingles, sigs)`` for docs with at least one shingle: the
+    cached tables ``(id, shingles)`` and ``(id, sig)``, with identical
+    id sets (sigs is a groupBy(id) over the explode of shingles).
+    Banding (:func:`lsh_band_rows`, :func:`lsh_candidate_pairs`) reads
+    ``sigs``; :func:`jaccard_verify` reads ``shingles``.
 
     ``caches``: optional out-param collecting the internally persisted
     DataFrames so LONG-RUNNING callers (NearDupGate's per-batch admits,
@@ -135,28 +139,14 @@ def minhash_signatures(
     sigs = h.groupBy(id_col).agg(*aggs).select(
         id_col, F.array(*[F.col(f"_m{i}") for i in range(NUM_HASHES)]).alias("sig")
     )
-    # Persist the TWO SKINNY tables — (id, shingles) and (id, sig) —
-    # never their join (optimization r15, adjudicating verdict r14 #1).
-    # r13 cached only `sh`, so LSH banding and both Jaccard-verify legs
-    # re-ran the explode + 16-min-hash aggregate (3 executions per
-    # pipeline); r14 cached the JOINED (id, shingles, sig) table, which
-    # ran the aggregate once but paid a shingle-array-sized join shuffle
-    # + a wider cache fill, and dedup_survivors regressed +18% on two
-    # boots.  The join is pure container convenience: banding reads only
-    # (id, sig) and verify reads only (id, shingles) — no consumer needs
-    # both in one row.  The skinny signature cache runs the aggregate
-    # once AND the join zero times; downstream helpers pick the table
-    # they need via the handles attached below (ids are identical across
-    # the three frames by construction: sigs = groupBy(id) over the
-    # explode of sh, so the lazy joined view stays a correct fallback
-    # for any caller that materializes it).
+    # Persist the TWO SKINNY tables, never their join: banding reads
+    # only (id, sig) and verify only (id, shingles), so the join bought
+    # nothing but a shingle-array-sized shuffle and a wider cache fill.
     sh = sh.cache()
     sigs = sigs.cache()
-    out = sh.join(sigs, id_col)
-    out._ssqe_minhash_parts = (sh, sigs)
     if caches is not None:
         caches.extend((sh, sigs))
-    return out
+    return sh, sigs
 
 
 def simhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -185,14 +175,7 @@ def simhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc
 def lsh_band_rows(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, band, band_sig) rows from a signature table: one explode to
     BANDS rows per doc; band_sig joins equal iff the band's LSH_ROWS
-    signature slots all match.
-
-    Banding touches only (id, sig): when the input carries the skinny
-    cached-parts handle from :func:`minhash_signatures`, band off the
-    cached (id, sig) table directly instead of the shingles⋈sig view."""
-    parts = getattr(sigs, "_ssqe_minhash_parts", None)
-    if parts is not None:
-        sigs = parts[1]
+    signature slots all match."""
     return sigs.select(
         F.col(id_col),
         F.explode(
@@ -248,12 +231,7 @@ def jaccard_verify(
     pairs: DataFrame, shingled: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """Exact Jaccard on candidate pairs (applied to candidates only —
-    never the quadratic pair space).  Verification touches only
-    (id, shingles): prefer the skinny cached shingle table when the
-    input carries the parts handle from :func:`minhash_signatures`."""
-    parts = getattr(shingled, "_ssqe_minhash_parts", None)
-    if parts is not None:
-        shingled = parts[0]
+    never the quadratic pair space) over an (id, shingles) table."""
     sh = shingled.select(F.col(id_col), F.col("shingles"))
     a = sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("shingles", "sh_a")
     b = sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("shingles", "sh_b")
@@ -859,15 +837,11 @@ class NearDupGate:
         within-batch rule, and store append as real bands."""
         idc = self.id_col
         caches: list = []
-        sigs = minhash_signatures(
+        _sh, sigs = minhash_signatures(
             docs, text_col=text_col, id_col=idc, caches=caches
         )
-        # ids(sig table) == ids(joined view) by construction; the skinny
-        # cached table makes the anti-join probe cheap
-        parts = getattr(sigs, "_ssqe_minhash_parts", None)
-        sig_ids = (parts[1] if parts is not None else sigs).select(idc)
         short_bands = (
-            docs.join(sig_ids, idc, "left_anti")
+            docs.join(sigs.select(idc), idc, "left_anti")
             .select(
                 F.col(idc),
                 F.lit(-1).alias("band"),

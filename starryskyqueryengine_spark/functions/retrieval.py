@@ -1,10 +1,11 @@
 """Incrementally-maintained BM25 inverted index.
 
-The round-5 persisted index (catalog_text.build_bm25_index) is
-build-once/serve-many; a living corpus needs the index to FOLLOW
-inserts, updates, and deletes without a rebuild.  This is the standard
-LSM-flavored design every search engine uses (Lucene's segments +
-deletes files, public knowledge), expressed in Spark primitives:
+The one persisted BM25 index: ``catalog_text.bm25_indexed_search``
+serves it (the corpus built as generation 0 on first use per dataset),
+and a living corpus keeps it current through inserts, updates, and
+deletes without a rebuild.  This is the standard LSM-flavored design
+every search engine uses (Lucene's segments + deletes files, public
+knowledge), expressed in Spark primitives:
 
 - **Segments, not rewrites.**  Each ``apply_changes`` batch appends new
   posting/doc-length rows tagged with a monotonically increasing
@@ -13,7 +14,7 @@ deletes files, public knowledge), expressed in Spark primitives:
   kills strictly OLDER generations, the fresh rows carry the current
   gen, so the pair composes correctly inside a single batch.
 - **Probe-time resolution.**  A query reads only the buckets its terms
-  hash into (PartitionFilters — same plan as the static index), then
+  hash into (PartitionFilters on ``term_bucket``), then
   drops candidate rows whose gen ≤ the doc's newest tombstone gen.
   Tombstones are bounded by deletes-since-compaction and broadcast.
 - **Exact incremental stats.**  (n_docs, total_dl) are maintained as
@@ -40,6 +41,7 @@ compaction is O(live index) and runs on the OPTIMIZE cadence.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 
@@ -47,20 +49,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+BM25_K1 = 1.2
+BM25_B = 0.75
+TERM_BUCKETS = 64
+
+# The BM25 per-term score over columns (tf, df, dl, n_docs, avgdl): the
+# one Spark text of the formula.  The scan-time plans (bm25_search,
+# hybrid and RAG retrieval) and this index's probe all evaluate it, so
+# every BM25 leg scores bit-identically; the DuckDB oracles keep their
+# own independent text.
+BM25_PART_SQL = (
+    f"ln(1 + (n_docs - df + 0.5D) / (df + 0.5D)) * tf * {BM25_K1 + 1!r}D"
+    f" / (tf + {BM25_K1!r}D * ({1 - BM25_B!r}D + {BM25_B!r}D * dl / avgdl))"
+)
+
+
 class Bm25IncrementalIndex:
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        n_buckets: int = 64,
-        k1: float = 1.2,
-        b: float = 0.75,
-    ):
+    def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        self.n_buckets = n_buckets
-        self.k1 = k1
-        self.b = b
         os.makedirs(path, exist_ok=True)
 
     # ------------------------------------------------------------ internals
@@ -99,7 +106,7 @@ class Bm25IncrementalIndex:
             "doc_id",
             "tf",
             F.lit(gen).cast("long").alias("gen"),
-            (F.abs(F.hash("term")) % self.n_buckets).alias("term_bucket"),
+            (F.abs(F.hash("term")) % TERM_BUCKETS).alias("term_bucket"),
         )
         dl = tf.groupBy("doc_id").agg(
             F.sum("tf").alias("dl")
@@ -142,7 +149,16 @@ class Bm25IncrementalIndex:
     # ------------------------------------------------------------- lifecycle
 
     def build(self, docs: DataFrame) -> None:
-        """Full build as generation 0."""
+        """Full build as generation 0, replacing whatever the directory
+        holds: a build that died before its stats.json commit left
+        segment rows behind, and appending to them would double every
+        posting."""
+        import shutil
+
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(os.path.join(self.path, "stats.json"))
+        for name in ("postings", "dl", "tombstones"):
+            shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
         postings, dl, tf = self._index_rows(docs, gen=0)
         self._append(postings, dl)
         row = dl.agg(
@@ -355,8 +371,11 @@ class Bm25IncrementalIndex:
     # ----------------------------------------------------------------- probe
 
     def probe(self, terms, top_k: int = 20) -> DataFrame:
-        """Same pruned-bucket plan as the static index; tombstone
-        resolution is one broadcast join over O(deletes-since-compact)."""
+        """Top-k BM25 over the query terms: the postings scan is pruned
+        to the terms' hash buckets (PartitionFilters on term_bucket), df
+        comes from the probe itself, dl is joined for candidate docs
+        only, and no text is tokenized.  Tombstone resolution is one
+        broadcast join over O(deletes-since-compact)."""
         st = self._stats()
         # dedupe query terms: a repeated term would double its postings
         # after the join (inflating df -> wrong idf, and double-counting
@@ -367,7 +386,7 @@ class Bm25IncrementalIndex:
             {
                 r["b"]
                 for r in qt.select(
-                    (F.abs(F.hash("term")) % self.n_buckets).alias("b")
+                    (F.abs(F.hash("term")) % TERM_BUCKETS).alias("b")
                 ).collect()
             }
         )
@@ -384,25 +403,8 @@ class Bm25IncrementalIndex:
         part = (
             postings.join(F.broadcast(df_t), "term")
             .join(dl.select("doc_id", "dl"), "doc_id")
-            .select(
-                "doc_id",
-                (
-                    F.log(
-                        F.lit(1)
-                        + (F.lit(st["n_docs"]) - F.col("df") + F.lit(0.5))
-                        / (F.col("df") + F.lit(0.5))
-                    )
-                    * F.col("tf") * F.lit(self.k1 + 1)
-                    / (
-                        F.col("tf")
-                        + F.lit(self.k1)
-                        * (
-                            F.lit(1 - self.b)
-                            + F.lit(self.b) * F.col("dl") / F.lit(avgdl)
-                        )
-                    )
-                ).alias("part"),
-            )
+            .withColumns({"n_docs": F.lit(st["n_docs"]), "avgdl": F.lit(avgdl)})
+            .select("doc_id", F.expr(BM25_PART_SQL).alias("part"))
         )
         return (
             part.groupBy("doc_id")

@@ -91,6 +91,53 @@ def _schema_cache_key(path: str) -> tuple | None:
         return None
 
 
+def table_fingerprint(sf_dir, table: str) -> tuple | None:
+    """The stat fingerprint of one fixture table: the cache key for every
+    artifact derived from it (IVF centroids, BPE merges, the BM25 index,
+    the Z-order layout), so a regenerated fixture rebuilds them."""
+    return _schema_cache_key(f"{sf_dir}/{table}.parquet")
+
+
+def artifact_dir(kind: str, sf_dir, table: str) -> str:
+    """Per-uid temp directory for a build-once artifact derived from one
+    fixture table.  The name carries the table's fingerprint, so a
+    regenerated fixture gets a fresh directory instead of stale files.
+    The temp dir is shared and world-writable: the uid in the name keeps
+    users apart, and ``assert_owned`` refuses a directory another uid
+    planted at the predictable path.  Callers run ``assert_owned`` again
+    at their trust point, just before a marker file (stats.json,
+    MANIFEST) is believed to mean a complete artifact."""
+    import hashlib
+    import os
+    import tempfile
+
+    fp = table_fingerprint(sf_dir, table)
+    tag = hashlib.md5(f"{sf_dir}|{fp}".encode()).hexdigest()[:12]
+    uid = os.getuid() if hasattr(os, "getuid") else 0
+    path = os.path.join(tempfile.gettempdir(), f"starrysky_{kind}_u{uid}_{tag}")
+    assert_owned(path)
+    return path
+
+
+def assert_owned(path: str) -> None:
+    """Refuse an artifact directory owned by another uid.  One stat(),
+    with a missing directory treated as the normal build-fresh case: an
+    exists()+stat() pair raises FileNotFoundError when the directory
+    vanishes between the two calls."""
+    import os
+
+    uid = os.getuid() if hasattr(os, "getuid") else 0
+    try:
+        st = os.stat(path)
+    except FileNotFoundError:
+        return
+    if getattr(st, "st_uid", uid) != uid:
+        raise PermissionError(
+            f"artifact dir {path} is owned by uid {st.st_uid}, not {uid}"
+            f" — refusing to use it"
+        )
+
+
 # DataFrame-plan memo (optimization r15, guide §1.2): even WITH the
 # cached schema, ``spark.read.schema(s).parquet(path)`` pays ~20-30 ms
 # of DataSource resolution py4j traffic per call — ~330 load_table

@@ -16,6 +16,12 @@ def test_resolve_round_inference_and_env_pin():
     assert resolve_round([11, 12, 13, 14], None) == (15, 14)
     assert resolve_round([11, 12, 13, 14], "14") == (14, 13)
     assert resolve_round([], "0") == (0, None)
+    # a reduced-core (_c{cpus}) pass runs after the driver wrote the
+    # round's main BENCH file: it belongs to that newest main round
+    # (the 8-core r15 pass once archived itself as round 16)
+    assert resolve_round([13, 14, 15], None, reduced=True) == (15, 14)
+    assert resolve_round([], None, reduced=True) == (0, None)
+    assert resolve_round([13, 14, 15], "15", reduced=True) == (15, 14)
 
 
 def test_shape_of_families():

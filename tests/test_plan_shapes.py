@@ -452,16 +452,18 @@ def test_bm25_indexed_probe_prunes_partitions_no_tokenize(spark, queries):
     """The indexed BM25 probe must read the postings with partition
     pruning on term_bucket and do NO query-time tokenization; the index
     build must run once (second probe reuses the on-disk index)."""
+    import json
     import os
 
-    from starryskyqueryengine_spark.catalog_text import (
-        _bm25_index_path,
-        build_bm25_index,
-    )
+    from starryskyqueryengine_spark.sources.fixtures import artifact_dir
 
-    path = build_bm25_index(spark, SF_DIR)
+    queries["bm25_indexed_search"](spark, SF_DIR)  # builds on first use
+    path = artifact_dir("bm25inc", SF_DIR, "documents")
     stats = os.path.join(path, "stats.json")
     mtime = os.path.getmtime(stats)
+    # the incremental index's sidecar, under its own directory prefix
+    with open(stats) as f:
+        assert {"gen", "n_docs", "total_dl"} <= set(json.load(f))
 
     df = queries["bm25_indexed_search"](spark, SF_DIR)
     plan = plan_of(df)
@@ -471,7 +473,6 @@ def test_bm25_indexed_probe_prunes_partitions_no_tokenize(spark, queries):
     )
     # build-once: serving did not rewrite the index
     assert os.path.getmtime(stats) == mtime
-    assert _bm25_index_path(SF_DIR) == path
 
 
 def test_topk_per_group_uses_window_group_limit(spark, queries):

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from starryskyqueryengine_spark.functions.retrieval import (
+    TERM_BUCKETS,
     Bm25IncrementalIndex,
 )
 
@@ -79,6 +80,20 @@ def test_incremental_equals_rebuild(spark, tmp_path):
     assert st["total_dl"] == total
 
 
+def test_build_over_uncommitted_build_does_not_double_postings(
+    spark, tmp_path
+):
+    """bm25_indexed_search builds whenever stats.json is absent, so a
+    build that died before its stats commit is followed by another
+    build into the same directory: it must replace the orphaned
+    segments, not append a second copy of every posting."""
+    idx = Bm25IncrementalIndex(spark, str(tmp_path / "idx"))
+    idx.build(_docs(spark, CORPUS))
+    os.remove(os.path.join(str(tmp_path / "idx"), "stats.json"))
+    idx.build(_docs(spark, CORPUS))
+    assert _probe(idx) == _rebuilt(spark, tmp_path, _docs(spark, CORPUS), "x")
+
+
 def test_compact_preserves_results_and_clears_tombstones(spark, tmp_path):
     idx = Bm25IncrementalIndex(spark, str(tmp_path / "idx"))
     idx.build(_docs(spark, CORPUS))
@@ -102,15 +117,15 @@ def test_compact_preserves_results_and_clears_tombstones(spark, tmp_path):
 
 
 def test_probe_prunes_buckets(spark, tmp_path):
-    """The maintained index keeps the static index's pruned-scan plan:
-    the postings read must touch only the query terms' hash buckets."""
+    """The maintained index keeps the pruned-scan plan: the postings
+    read must touch only the query terms' hash buckets."""
     idx = Bm25IncrementalIndex(spark, str(tmp_path / "idx"))
     idx.build(_docs(spark, CORPUS))
     qt = spark.createDataFrame([(t,) for t in TERMS], "term string")
     buckets = {
         r["b"]
         for r in qt.select(
-            (F.abs(F.hash("term")) % idx.n_buckets).alias("b")
+            (F.abs(F.hash("term")) % TERM_BUCKETS).alias("b")
         ).collect()
     }
     scan = (
@@ -118,7 +133,8 @@ def test_probe_prunes_buckets(spark, tmp_path):
         .filter(F.col("term_bucket").isin(sorted(buckets)))
     )
     # inputFiles() reports the pre-pruning listing; the pruning claim
-    # lives in the plan's PartitionFilters (same pin as the static index)
+    # lives in the plan's PartitionFilters (the bm25_indexed_search plan
+    # test pins the same)
     plan = scan._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [term_bucket" in plan
     assert " IN (" in plan
@@ -216,14 +232,17 @@ def test_bm25_index_cache_refuses_foreign_ownership(monkeypatch, tmp_path):
 
     import pytest as _pytest
 
-    from starryskyqueryengine_spark.catalog_text import _bm25_index_path
+    from starryskyqueryengine_spark.sources.fixtures import artifact_dir
+
+    def bm25_path():
+        return artifact_dir("bm25inc", "/nonexistent-sf", "documents")
 
     real_uid = os.getuid()
     fake_uid = real_uid + 1
     monkeypatch.setattr(os, "getuid", lambda: fake_uid)
     # compute the fake uid's path, then pre-plant it owned by OUR uid
     try:
-        planted = _bm25_index_path("/nonexistent-sf")
+        planted = bm25_path()
     except PermissionError:
         planted = None
     if planted is None or os.path.exists(planted):
@@ -231,13 +250,13 @@ def test_bm25_index_cache_refuses_foreign_ownership(monkeypatch, tmp_path):
     os.makedirs(planted)
     try:
         with _pytest.raises(PermissionError, match="refusing"):
-            _bm25_index_path("/nonexistent-sf")
+            bm25_path()
     finally:
         os.rmdir(planted)
     # and the happy path: our own uid's dir is accepted
     monkeypatch.setattr(os, "getuid", lambda: real_uid)
-    p = _bm25_index_path("/nonexistent-sf")
-    assert f"u{real_uid}_" in os.path.basename(p)
+    p = bm25_path()
+    assert os.path.basename(p).startswith(f"starrysky_bm25inc_u{real_uid}_")
 
 
 def test_bm25_ownership_gate_has_no_toctou_window(monkeypatch, tmp_path):
@@ -245,15 +264,15 @@ def test_bm25_ownership_gate_has_no_toctou_window(monkeypatch, tmp_path):
     FileNotFoundError if the dir vanished between the two calls, and a
     dir planted after path computation was never re-checked.  The gate
     now stats directly (missing dir = fine, that's the build-fresh
-    case) and build_bm25_index re-runs it at the trust point."""
+    case) and bm25_indexed_search re-runs it at the trust point."""
     import os
 
     import pytest as _pytest
 
-    from starryskyqueryengine_spark.catalog_text import _assert_owned
+    from starryskyqueryengine_spark.sources.fixtures import assert_owned
 
     # missing path: plain return, no exception (the old code's window)
-    _assert_owned(str(tmp_path / "never-created"))
+    assert_owned(str(tmp_path / "never-created"))
 
     # a dir that appears foreign-owned is refused wherever the gate runs
     d = tmp_path / "planted"
@@ -274,27 +293,34 @@ def test_bm25_ownership_gate_has_no_toctou_window(monkeypatch, tmp_path):
         if str(p) == str(d) else real_stat(p, *a, **k),
     )
     with _pytest.raises(PermissionError, match="refusing"):
-        _assert_owned(str(d))
+        assert_owned(str(d))
 
 
-def test_build_bm25_index_regates_at_trust_point(monkeypatch, tmp_path):
+def test_bm25_indexed_search_regates_at_trust_point(monkeypatch, tmp_path):
     """The ownership check must run where stats.json existence is
-    TRUSTED (build_bm25_index), not only at path computation — a dir
+    TRUSTED (bm25_indexed_search), not only at path computation — a dir
     planted between the two would otherwise have its postings served."""
     import starryskyqueryengine_spark.catalog_text as ct
 
+    class _Index:
+        def __init__(self, spark, path):
+            pass
+
+        def build(self, docs):
+            raise AssertionError("a complete index must be served, not rebuilt")
+
+        def probe(self, terms, top_k):
+            return ("probe", tuple(terms), top_k)
+
     calls = []
-    monkeypatch.setattr(
-        ct, "_assert_owned", lambda p: calls.append(p)
-    )
-    monkeypatch.setattr(
-        ct, "_bm25_index_path", lambda sf: str(tmp_path / "idx")
-    )
-    # plant a "complete" index so build returns at the trust point
+    monkeypatch.setattr(ct, "assert_owned", lambda p: calls.append(p))
+    monkeypatch.setattr(ct, "artifact_dir", lambda *a: str(tmp_path / "idx"))
+    monkeypatch.setattr(ct, "Bm25IncrementalIndex", _Index)
+    # plant a "complete" index so the query serves it at the trust point
     (tmp_path / "idx").mkdir()
     (tmp_path / "idx" / "stats.json").write_text("{}")
-    out = ct.build_bm25_index(None, "/nonexistent-sf")
-    assert out == str(tmp_path / "idx")
+    out = ct.bm25_indexed_search(None, "/nonexistent-sf")
+    assert out == ("probe", ct.BM25_QUERY_TERMS, ct.BM25_TOP_K)
     assert calls == [str(tmp_path / "idx")]
 
 

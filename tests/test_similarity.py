@@ -467,9 +467,9 @@ def test_cross_source_dup_matrix_consistent_with_pair_set(spark):
     assert all(r["source_a"] <= r["source_b"] for r in rows)
 
     docs = load_table(spark, SF, "documents")
-    sigs = dd.minhash_signatures(docs)
+    sh, sigs = dd.minhash_signatures(docs)
     n_pairs = (
-        dd.jaccard_verify(dd.lsh_candidate_pairs(sigs), sigs)
+        dd.jaccard_verify(dd.lsh_candidate_pairs(sigs), sh)
         .filter(F.col("jaccard") >= MINHASH_VERIFY_THRESHOLD)
         .count()
     )

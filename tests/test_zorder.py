@@ -90,6 +90,45 @@ def test_unbounded_sides_and_none_ranges(spark, zlayout):
     assert n_read <= n_total
 
 
+def test_zorder_cache_refuses_foreign_owned_dir(monkeypatch, tmp_path):
+    """zorder_skipping_scan's layout cache goes through the shared
+    ownership gate: a directory at the predictable per-uid path that
+    another uid owns is refused at path computation, and one planted
+    after that is refused where MANIFEST is trusted — never served as
+    lineitem data."""
+    import tempfile
+
+    import starryskyqueryengine_spark.catalog_analytics as ca
+    from starryskyqueryengine_spark.sources.fixtures import artifact_dir
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    path = artifact_dir("zorder", SF_DIR, "lineitem")
+    os.makedirs(path)
+    with open(os.path.join(path, MANIFEST), "w") as f:
+        f.write("{}")
+    real_stat = os.stat
+
+    class _ForeignStat:
+        def __init__(self, st):
+            self._st = st
+            self.st_uid = os.getuid() + 1
+
+        def __getattr__(self, k):
+            return getattr(self._st, k)
+
+    monkeypatch.setattr(
+        os, "stat",
+        lambda p, *a, **k: _ForeignStat(real_stat(p, *a, **k))
+        if str(p) == path else real_stat(p, *a, **k),
+    )
+    with pytest.raises(PermissionError, match="refusing"):
+        ca.zorder_skipping_scan(None, SF_DIR)
+    # planted after the path check ran: the MANIFEST trust point refuses it
+    monkeypatch.setattr(ca, "artifact_dir", lambda *a: path)
+    with pytest.raises(PermissionError, match="refusing"):
+        ca.zorder_skipping_scan(None, SF_DIR)
+
+
 def test_manifest_builds_in_one_scan_not_per_file(spark, tmp_path):
     """The stats pass must be ONE groupBy(input_file_name()) job — a
     read.parquet(file) loop per written file is a driver-side job storm
