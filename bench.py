@@ -1,17 +1,34 @@
-"""Benchmark harness: runs the headline query set at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": N}.
+"""Timing harness for the catalog queries.  Every query runs against the
+noop sink (the full plan executes distributed, with no driver-side
+collect skew) on local[$SPARK_GRAFT_CPUS], at --sf (default
+$SPARK_GRAFT_SF_DIR, else sf0.1 of the test fixtures).
 
-Execution is measured with the noop sink (full plan runs distributed; no
-driver-side collect skew). The flagship single-pass multi-condition
-materialization is included alongside the catalog queries.
+  python bench.py
+      1 cold + 3 steady catalog laps.  The full payload goes to stderr,
+      bench_full.json and the round archive bench_full_r{N}.json; stdout
+      carries ONE compact JSON line.
+  python bench.py q1 q2 ... [--laps N] [--explain-dir D --suffix S]
+      Each named query alone, N laps (default 4), printing one line per
+      query: {"query", "laps", "median", "build"}.  --explain-dir writes
+      each query's formatted plan to D/<query><S>.txt first.
+  python bench.py lap [label]
+      One uncounted warm catalog lap, then one measured lap, printing
+      {"label", "lap_total", "queries"}: for interleaved A/B runs between
+      two trees, not a replacement for the 4-lap medians.
+
+A query's time runs from the start of its plan construction to the end
+of its noop write; "build" is the plan-construction part, which includes
+any job the query fires while being built.
 """
 
 from __future__ import annotations
 
+import argparse
+import gc
+import glob
 import json
 import os
+import re
 import sys
 import time
 
@@ -20,22 +37,147 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from starryskyqueryengine_spark import catalog  # noqa: E402
 from starryskyqueryengine_spark.session import get_spark  # noqa: E402
 
+HERE = os.path.dirname(os.path.abspath(__file__))
+
+# A lap runs ~200 queries in one JVM.  Their shuffle files, broadcast
+# blocks and cached frames are freed only at a GC, so without one the
+# debris of earlier queries steals executor memory from later ones (late
+# queries then read 2-7x their standalone times).  force_gc runs every
+# GC_EVERY queries and after any query slower than GC_AFTER_SEC, the
+# queries that actually leave garbage behind.
+GC_EVERY = 8
+GC_AFTER_SEC = 1.0
+
+# One code-untouched control query per execution shape.  Machine drift is
+# not uniform across shapes, so a query's round-over-round ratio is
+# divided by its own shape's control ratio.  A control must stay
+# untouched; if a change touches one, swap in another query of the same
+# shape.
+DRIFT_CONTROLS = {
+    # JVM shuffle + iterative aggregation, no Python rows
+    "jvm_shuffle": "pagerank_part_supplier",
+    # Arrow-batched Python codec work: tracks Python-worker throughput
+    "python_codec": "mm_png_decode",
+    # sub-second projection: tracks fixed per-query overhead (py4j,
+    # planning), not compute
+    "overhead_scalar": "f7_coalesce_defaults",
+    # availableNow stream drain: tracks state-store/checkpoint I/O
+    "stream_checkpoint": "w8_stream_tumbling_counts",
+}
+
 
 def run_df(df) -> None:
     df.write.format("noop").mode("overwrite").save()
+
+
+def _noop_batches(batches):
+    yield from batches
+
+
+def start_session(sf_dir: str, cpus: int):
+    """The bench session, warmed so that no query's first lap pays a
+    one-time start-up cost."""
+    spark = get_spark(
+        "ssqe-bench",
+        master=f"local[{cpus}]",
+        extra_confs={
+            # the ContextCleaner's own periodic GC defaults to 30 min,
+            # longer than a whole bench
+            "spark.cleaner.periodicGC.interval": "1min",
+            # the worker-pool warm-up below only pays off with reuse on
+            "spark.python.worker.reuse": "true",
+        },
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    # executors and codegen, against a tiny table
+    run_df(spark.read.parquet(f"{sf_dir}/region.parquet"))
+    # The first Arrow task on each core forks a Python worker (~50 ms);
+    # one no-op mapInPandas with one task per core forks the whole pool.
+    run_df(
+        spark.range(0, cpus, 1, numPartitions=cpus).mapInPandas(
+            _noop_batches, "id long"
+        )
+    )
+    # Python DataSources run in their own worker classes (a driver-side
+    # plan worker and executor read workers) that the pool above does not
+    # fork; one single-page read warms both.
+    from starryskyqueryengine_spark.sources.paged_datasource import (
+        register_paged_sources,
+    )
+
+    register_paged_sources(spark)
+    run_df(
+        spark.read.format("starrysky_paged")
+        .option("path", f"{sf_dir}/documents.parquet")
+        .option("max_pages", "1")
+        .option("num_partitions", "1")
+        .load()
+    )
+    return spark
+
+
+def force_gc(spark) -> None:
+    # CacheManager entries (DataFrame.cache() inside catalog queries) are
+    # not freed by GC: they live until unpersisted, stealing storage from
+    # later queries and letting a later lap reuse an earlier lap's cache.
+    spark.catalog.clearCache()
+    gc.collect()  # drop py4j handles so JVM weak refs can clear
+    # the first JVM pass enqueues the weak refs; the second lets the
+    # ContextCleaner's shuffle and broadcast blocks actually drop
+    spark.sparkContext._jvm.System.gc()
+    spark.sparkContext._jvm.System.gc()
+
+
+def run_lap(spark, queries: dict, sf_dir: str) -> tuple[dict, dict]:
+    """Run each query once, in order, under the GC policy.  Returns
+    ({name: total_sec}, {name: build_sec})."""
+    total: dict[str, float] = {}
+    build: dict[str, float] = {}
+    force_gc(spark)
+    since_gc = 0
+    for name, fn in queries.items():
+        if since_gc >= GC_EVERY:
+            force_gc(spark)
+            since_gc = 0
+        spark.sparkContext.setJobDescription(f"bench:{name}")
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        run_df(df)
+        dt = time.perf_counter() - t0
+        build[name] = round(t1 - t0, 4)
+        total[name] = round(dt, 4)
+        # caches a query builds (signature tables etc.) are its own
+        spark.catalog.clearCache()
+        if dt > GC_AFTER_SEC:
+            force_gc(spark)
+            since_gc = 0
+        else:
+            since_gc += 1
+    spark.sparkContext.setJobDescription(None)
+    return total, build
+
+
+def catalog_queries() -> dict:
+    """The catalog in registration order, then the driver-contract
+    flagship (which runs at its own pinned sf0.001 fixture)."""
+    import __spark_entry__ as entrymod
+
+    queries = dict(catalog.get_queries())
+    queries["flagship_materialize"] = lambda spark, _sf: entrymod.entry(spark)
+    return queries
 
 
 def resolve_round(
     rounds: list, env_round: str | None, reduced: bool = False
 ) -> tuple:
     """(current, previous) bench round.  $SPARK_GRAFT_ROUND pins the
-    current round explicitly (ADVICE r13: the max(BENCH_r*)+1 inference
-    mislabels a re-lap run after the driver has written this round's
-    BENCH file); the previous round for ratio purposes is then simply
-    current-1.  Without the pin, a main run is round max+1.  A
-    ``reduced``-core run (archived with a ``_c{cpus}`` suffix) is an
-    extra pass over a round whose main BENCH file is already written,
-    so it takes the newest main round, not max+1."""
+    current round explicitly (the max(BENCH_r*)+1 inference mislabels a
+    re-lap run after this round's BENCH file is written); the previous
+    round is then simply current-1.  Without the pin, a main run is round
+    max+1.  A ``reduced``-core run (archived with a ``_c{cpus}`` suffix)
+    is an extra pass over a round whose main BENCH file is already
+    written, so it takes the newest main round, not max+1."""
     if env_round:
         cur = int(env_round)
     elif not rounds:
@@ -49,11 +191,9 @@ def resolve_round(
 
 def shape_of(name: str, med: float, python_queries: set) -> str:
     """Execution-shape classification for drift normalization.  Callers
-    comparing two rounds must pass min(current, previous) median
-    (ADVICE r13): classifying on the current round alone let a query
-    that crossed the 0.3s overhead threshold between rounds be
-    normalized against a different shape than the round it is being
-    compared to."""
+    comparing two rounds must pass min(current, previous) median, so a
+    query that crossed the 0.3 s overhead threshold between the rounds is
+    normalized against the same shape on both sides."""
     if "stream" in name or name.startswith(("w1_", "w2_", "w8_", "w_")):
         return "stream_checkpoint"
     if name in python_queries:
@@ -63,516 +203,171 @@ def shape_of(name: str, med: float, python_queries: set) -> str:
     return "jvm_shuffle"
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+def _python_queries() -> set:
+    """Queries whose plans hold Python nodes, per the last plan lint."""
+    try:
+        with open(os.path.join(HERE, "PLANLINT.json")) as fh:
+            lint = json.load(fh)
+    except (OSError, ValueError):
+        return set()  # no plan lint yet: they fall to jvm_shuffle
+    return {
+        q for q, info in lint.get("queries", {}).items()
+        if info.get("python_nodes")
+    }
+
+
+def normalize_vs(median: dict, prev: dict, sf: float, prev_round: int):
+    """Each query's ratio to the previous round's archived median,
+    divided by its shape's control ratio.  Returns (ratios, summary)."""
+    # cross-SF ratios are meaningless (an sf0.001 smoke against an sf0.1
+    # archive reads as a uniform 3-5x "regression")
+    if prev.get("sf") != sf:
+        return {}, {
+            "vs_round": prev_round,
+            "skipped": f"sf mismatch: prev {prev.get('sf')} vs current {sf}",
+        }
+    prev_med = prev.get("queries", {})
+    control_ratio = {
+        shape: median[q] / prev_med[q]
+        for shape, q in DRIFT_CONTROLS.items()
+        if prev_med.get(q) and q in median
+    }
+    python_queries = _python_queries()
+    ratios: dict[str, dict] = {}
+    for k, v in median.items():
+        p = prev_med.get(k)
+        if not p:
+            continue
+        shape = shape_of(k, min(v, p), python_queries)
+        c = control_ratio.get(shape)
+        ratios[k] = {
+            "raw": round(v / p, 3),
+            "shape": shape,
+            "normalized": round(v / p / c, 3) if c else None,
+        }
+    normed = {k: r["normalized"] for k, r in ratios.items()
+              if r["normalized"] is not None}
+    if not normed:
+        return ratios, {}
+    norms = sorted(normed.values())
+    worst = sorted(normed, key=normed.get, reverse=True)[:5]
+    return ratios, {
+        "vs_round": prev_round,
+        "control_ratios": {s: round(c, 3) for s, c in control_ratio.items()},
+        "median_normalized": norms[len(norms) // 2],
+        "n_over_1p5": sum(1 for x in norms if x > 1.5),
+        "worst5": {k: normed[k] for k in worst},
+    }
+
+
+def noise_note(laps: dict, median: dict) -> str:
+    """A per-run noise note computed from the laps in this very payload:
+    per-lap totals, the flagship's per-lap spread and the overhead
+    control's per-lap ratio to its median, everything a reader needs to
+    tell one-lap contention from an all-lap change."""
+    steady = {n: d for n, d in laps.items() if n != "cold"}
+    totals = {n: round(sum(d.values()), 1) for n, d in steady.items()}
+    worst = max(totals, key=totals.get)
+    best = min(totals, key=totals.get)
+    oc_q = DRIFT_CONTROLS["overhead_scalar"]
+    oc_med = median.get(oc_q)
+    oc_laps = {
+        n: (round(d[oc_q] / oc_med, 2) if oc_med and oc_q in d else None)
+        for n, d in steady.items()
+    }
+    flag_laps = {n: d.get("flagship_materialize") for n, d in laps.items()}
+    return (
+        f"computed from this run: steady lap totals {totals} "
+        f"(worst {worst} = {round(totals[worst] / totals[best], 2)}x "
+        f"best {best}); flagship per-lap {flag_laps}; "
+        f"overhead control {oc_q} per-lap ratio to its median {oc_laps} "
+        f"— a worst-normalized query elevated only in {worst} is "
+        f"lap contention, elevated in all steady laps is real"
+    )
+
+
+def bench_catalog(spark, queries: dict, sf_dir: str, cpus: int) -> dict:
+    """Plain mode: 1 cold + 3 steady laps, archived per round.  Returns
+    the compact stdout payload."""
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
     except ValueError:
         sf = -1.0  # non-conforming dir name: record "unknown", don't crash
-
-    # A single-JVM local[N] bench runs ~230 query executions in one
-    # process; Spark's ContextCleaner only reclaims dead shuffle files /
-    # broadcast blocks when driver GC processes their weak refs, and its
-    # safety-net periodic GC defaults to 30 MINUTES — longer than the
-    # whole bench. Without forcing GC, block-manager debris from earlier
-    # queries steals executor memory from later ones (round-4 symptom:
-    # lap2_total > cold_total, with late-catalog queries 2-7x their
-    # standalone times). Shorten the cleaner's net and force a full GC
-    # every GC_EVERY queries; on a real cluster the same knob is the
-    # standard long-running-driver setting.
-    spark = get_spark(
-        "ssqe-bench",
-        master=f"local[{cpus}]",
-        extra_confs={
-            "spark.cleaner.periodicGC.interval": "1min",
-            # pin the default explicitly: the cold-lap analysis (r10
-            # notes) attributed the first-touch excess on ~10
-            # Arrow-batched queries to Python worker spawn — reuse must
-            # stay on for the pool warm-up below to amortize it
-            "spark.python.worker.reuse": "true",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    GC_EVERY = 8  # was 15; the catalog grew ~25% in round 6 and late
-    # queries were again measuring other queries' garbage (lap2 > cold
-    # on individual late entries while standalone runs were 2-3x faster)
-
-    def force_gc() -> None:
-        import gc
-
-        # CacheManager entries (DataFrame .cache() inside catalog
-        # queries: LSH bands, graph edge lists, classifier features)
-        # are NOT freed by GC — they live until explicit unpersist or
-        # session end, so across ~230 query executions per lap they
-        # steal executor storage from later queries AND let laps 2-4
-        # reuse lap 1's cache (dishonest per-lap numbers). Clearing at
-        # every GC checkpoint (GC_EVERY queries) keeps measurements
-        # independent across laps.
-        spark.catalog.clearCache()
-        gc.collect()  # drop py4j handles so JVM weak refs can clear
-        # two JVM passes: the first clears strong refs and enqueues weak
-        # refs, the second lets the ContextCleaner's processed refs'
-        # shuffle/broadcast blocks actually drop
-        spark.sparkContext._jvm.System.gc()
-        spark.sparkContext._jvm.System.gc()
-
-    import __spark_entry__ as entrymod
-
-    queries = dict(catalog.get_queries())
-
-    # warmup: initialize executors/codegen against a tiny table
-    run_df(spark.read.parquet(f"{sf_dir}/region.parquet"))
-
-    # warm the PYTHON WORKER POOL too (r11, verdict #7): the first
-    # mapInPandas/pandas-UDF task on each core forks a worker (~50 ms
-    # each), a one-time cost that landed inside the cold lap's ~10
-    # first-touch Arrow queries.  One no-op mapInPandas with one task
-    # per core spawns the whole pool up front; with worker reuse on,
-    # every later Arrow query finds an idle worker.
-    def _noop_batches(batches):
-        yield from batches
-
-    run_df(
-        spark.range(0, cpus, 1, numPartitions=cpus).mapInPandas(
-            _noop_batches, "id long"
-        )
-    )
-
-    # the Python DataSource machinery runs in its OWN worker classes
-    # (driver-side plan worker + executor read workers) that the
-    # mapInPandas pool does not pre-fork — s1_datasource_scan carried
-    # +2.9s of that startup in the r11 quiet cold lap.  One single-page
-    # read warms both.
-    from starryskyqueryengine_spark.sources.paged_datasource import (
-        register_paged_sources,
-    )
-
-    register_paged_sources(spark)
-    run_df(
-        spark.read.format("starrysky_paged")
-        .option("path", f"{sf_dir}/documents.parquet")
-        .option("max_pages", "1")
-        .option("num_partitions", "1")
-        .load()
-    )
-
-    # ONE cold lap + THREE steady laps (round-7 verdict #7, refined in
-    # round 8): the cold lap carries one-time whole-stage-codegen
-    # compilation and Python-worker spin-up, costs that a 100 TB run
-    # amortizes to nothing — so it is reported as a sidecar and EXCLUDED
-    # from the headline.  The heavy iterative queries showed 30-40%
-    # INTRA-run spread in round 7, so the headline per-query figure is
-    # the MEDIAN of the three STEADY laps — robust to a single noisy lap
-    # in either direction, unlike best-of (chases lucky laps) or a
-    # single steady lap (chases unlucky ones).  (Round 8's first cut
-    # took the median over {cold, steady, steady}: whenever the cold lap
-    # was the max — true for every compile-heavy iterative query — the
-    # median degenerated to the SECOND-WORST of two steady laps and the
-    # headline inherited cold-lap noise.  Median over three steady laps
-    # estimates the steady state it claims to measure.)  The per-query
-    # min across all laps is kept as a sidecar for continuity with
-    # rounds <= 7, whose `value` was best-of-two.
-    # Adaptive GC: the round-8 window front-loads the heavy iterative /
-    # capstone queries back to back, and their shuffle+checkpoint debris
-    # measurably contaminated later queries (label_prop_communities
-    # 8.3 s cold -> 29-31 s in laps 2-3 under GC_EVERY=8 alone; with a
-    # GC after every heavy query the same laps run 7-9 s flat).  A GC
-    # after any query slower than GC_AFTER_SEC plus the every-GC_EVERY
-    # floor keeps the overhead to the queries that actually generate
-    # garbage.
-    GC_AFTER_SEC = 1.0
-    laps: list[dict[str, float]] = [{}, {}, {}, {}]
-    for lap in laps:
-        # lap boundary: the previous lap ends with flagship_materialize
-        # (heavy, outside the adaptive loop) — GC before the next lap's
-        # first measurements
-        force_gc()
-        since_gc = 0
-        for name, fn in queries.items():
-            if since_gc >= GC_EVERY:
-                force_gc()
-                since_gc = 0
-            t0 = time.perf_counter()
-            run_df(fn(spark, sf_dir))
-            dt = time.perf_counter() - t0
-            lap[name] = round(dt, 4)
-            # intra-query caches (signature tables etc.) are scoped to
-            # the query; drop them so queries are measured independently
-            spark.catalog.clearCache()
-            if dt > GC_AFTER_SEC:
-                force_gc()
-                since_gc = 0
-            else:
-                since_gc += 1
-        t0 = time.perf_counter()
-        run_df(entrymod.entry(spark))
-        lap["flagship_materialize"] = round(time.perf_counter() - t0, 4)
-        spark.catalog.clearCache()
-
-    cold, lap2, lap3, lap4 = laps
+    # The cold lap carries one-time codegen and first-touch costs, so it
+    # is a sidecar.  The headline per query is the MEDIAN of the three
+    # steady laps: robust to one noisy lap either way, where best-of
+    # chases lucky laps.  The all-lap min is kept as a sidecar.
+    runs = [run_lap(spark, queries, sf_dir) for _ in range(4)]
+    cold, lap2, lap3, lap4 = (t for t, _ in runs)
     median = {k: sorted([lap2[k], lap3[k], lap4[k]])[1] for k in cold}
+    build = {k: sorted(b[k] for _, b in runs[1:])[1] for k in cold}
     best = {k: min(cold[k], lap2[k], lap3[k], lap4[k]) for k in cold}
-    total = round(sum(median.values()), 4)
-
-    # Drift-control BASKET (r12, verdict r11 ask #1): one untouched
-    # control per EXECUTION SHAPE, because machine drift is not uniform
-    # across shapes — the r11 boot ran Python-worker-heavy queries
-    # 1.5-1.7x while the JVM-shuffle control read only 1.17x, so a
-    # single control under-normalizes half the catalog.  To attribute a
-    # regression: divide the suspect query's round-over-round ratio by
-    # its SHAPE's control ratio, not by the global one.  Controls must
-    # stay code-untouched to stay valid; if a round touches one, swap
-    # in another untouched query of the same shape and note it here.
-    DRIFT_CONTROLS = {
-        # JVM shuffle + iterative agg, zero Python rows (untouched
-        # since r8; the original single control)
-        "jvm_shuffle": "pagerank_part_supplier",
-        # Arrow-batched Python codec work (real PNG decode per row) —
-        # tracks Python-worker throughput, the shape that drifted
-        # hardest in r11
-        "python_codec": "mm_png_decode",
-        # sub-second scalar projection — tracks fixed per-query
-        # overhead (py4j round-trips, planning), not compute
-        "overhead_scalar": "f7_coalesce_defaults",
-        # availableNow stream drain — tracks state-store/checkpoint
-        # filesystem I/O
-        "stream_checkpoint": "w8_stream_tumbling_counts",
-    }
-    drift_controls = {
-        shape: {"query": q, "median_sec": median.get(q)}
-        for shape, q in DRIFT_CONTROLS.items()
-    }
-
-    # --- Round-keyed archive + shape-normalized ratios (r13, verdict
-    # asks #2/#7).  The driver writes BENCH_r{N}.json after each round,
-    # so the round being benched is max(existing)+1; bench_full_r{N}.json
-    # archives the FULL per-query medians per round so round-over-round
-    # deltas stop relying on top-5 + notes reconstruction.  Each query's
-    # raw ratio vs the previous archive is divided by its execution
-    # SHAPE's control ratio — the gate then reads drift-corrected
-    # numbers (memory: this VM drifts 1.2-1.7x per boot, shape-dependent).
-    here = os.path.dirname(os.path.abspath(__file__))
-    import glob as _glob
-    import re as _re
 
     rounds = sorted(
         int(m.group(1))
-        for f in _glob.glob(os.path.join(here, "BENCH_r*.json"))
-        if (m := _re.search(r"BENCH_r(\d+)\.json$", f))
+        for f in glob.glob(os.path.join(HERE, "BENCH_r*.json"))
+        if (m := re.search(r"BENCH_r(\d+)\.json$", f))
     )
-    # explicit round override (ADVICE r13): max(BENCH_r*)+1 assumes
-    # bench.py runs exactly once per round BEFORE the driver writes
-    # BENCH_r{N}.json — a quiet-machine re-lap after the driver's write
-    # would shift the round by one, archiving under the wrong round and
-    # mislabeling the next round's baseline.  $SPARK_GRAFT_ROUND pins it.
     env_round = os.environ.get("SPARK_GRAFT_ROUND")
-    # A reduced-core scaling run (driver's low-cpu pass) must never claim
-    # the round's main archive slot: r14's 8-core pass ran after the
-    # driver wrote BENCH_r14.json, inferred round 15, and archived 8-core
-    # numbers as bench_full_r15.json.  Suffix the archive with the core
-    # count whenever it differs from the machine's full count, and label
-    # it with the main round it ran after.
+    # A reduced-core run must never claim the round's main archive slot:
+    # it is suffixed with its core count and labelled with the main round
+    # it ran after.
     cpu_tag = "" if cpus == (os.cpu_count() or cpus) else f"_c{cpus}"
     cur_round, prev_round = resolve_round(rounds, env_round, bool(cpu_tag))
-    full_path = os.path.join(here, "bench_full.json")
-    prev_arch = (
-        os.path.join(here, f"bench_full_r{prev_round:02d}.json")
-        if prev_round is not None
-        else None
-    )
-    # one-time backfill: the pre-archive bench_full.json was written by
-    # the previous round's gate run — attribute it to that round
-    if prev_arch and not os.path.exists(prev_arch) and os.path.exists(full_path):
-        import shutil as _shutil
-
-        _shutil.copyfile(full_path, prev_arch)
-
-    _shape_of = shape_of
-
-    python_queries: set = set()
-    try:
-        with open(os.path.join(here, "PLANLINT.json")) as fh:
-            _pl = json.load(fh)
-        python_queries = {
-            q for q, info in _pl.get("queries", {}).items()
-            if info.get("python_nodes")
-        }
-    except (OSError, ValueError):
-        pass  # no plan lint yet: python-shaped queries fall to jvm_shuffle
-
-    normalized_ratios: dict[str, dict] = {}
-    norm_summary: dict = {}
-    if prev_arch and os.path.exists(prev_arch):
+    ratios, summary = {}, {}
+    if prev_round is not None:
         try:
-            with open(prev_arch) as fh:
-                _prev_payload = json.load(fh)
-            prev_med = _prev_payload.get("queries", {})
-            # cross-SF ratios are meaningless (an sf0.001 smoke against
-            # an sf0.1 archive read as a uniform 3-5x "regression") —
-            # only same-SF rounds compare
-            if _prev_payload.get("sf") != sf:
-                prev_med = {}
-                norm_summary = {
-                    "vs_round": prev_round,
-                    "skipped": f"sf mismatch: prev {_prev_payload.get('sf')}"
-                               f" vs current {sf}",
-                }
+            with open(os.path.join(HERE, f"bench_full_r{prev_round:02d}.json")) as fh:
+                ratios, summary = normalize_vs(median, json.load(fh), sf, prev_round)
         except (OSError, ValueError):
-            prev_med = {}
-        control_ratio = {
-            shape: median[q] / prev_med[q]
-            for shape, q in DRIFT_CONTROLS.items()
-            if prev_med.get(q) and q in median
-        }
-        for k, v in median.items():
-            p = prev_med.get(k)
-            if not p:
-                continue
-            raw = v / p
-            # classify on min(current, previous) median (ADVICE r13):
-            # a query crossing the 0.3s overhead threshold BETWEEN the
-            # two rounds being compared would otherwise be normalized
-            # against a different shape than last round used, skewing
-            # its reported normalized ratio; min-of-both is stable
-            # across the pair
-            shape = _shape_of(k, min(v, p), python_queries)
-            c = control_ratio.get(shape)
-            normalized_ratios[k] = {
-                "raw": round(raw, 3),
-                "shape": shape,
-                "normalized": round(raw / c, 3) if c else None,
-            }
-        norms = sorted(
-            r["normalized"] for r in normalized_ratios.values()
-            if r["normalized"] is not None
-        )
-        if norms:
-            worst = sorted(
-                (
-                    (k, r["normalized"])
-                    for k, r in normalized_ratios.items()
-                    if r["normalized"] is not None
-                ),
-                key=lambda kv: kv[1],
-                reverse=True,
-            )[:5]
-            norm_summary = {
-                "vs_round": prev_round,
-                "control_ratios": {s: round(c, 3)
-                                   for s, c in control_ratio.items()},
-                "median_normalized": norms[len(norms) // 2],
-                "n_over_1p5": sum(1 for x in norms if x > 1.5),
-                "worst5": {k: v for k, v in worst},
-            }
+            pass  # no archive for the previous round: nothing to compare
+
     payload = {
         "metric": "catalog_total_runtime",
-        "value": total,
+        "value": round(sum(median.values()), 4),
         "unit": "sec",
         "queries": median,
         "sf": sf,
-        # entry() runs the driver-contract flagship at its PINNED
-        # sf0.001 fixture regardless of $SPARK_GRAFT_SF_DIR — recorded
-        # so cross-sf comparisons don't misread that one component
+        # entry() runs the flagship at its pinned sf0.001 fixture whatever
+        # the bench's sf, so cross-sf comparisons must not read that one
+        # component
         "flagship_materialize_sf": 0.001,
         "cold_total_sec": round(sum(cold.values()), 4),
         "lap2_total_sec": round(sum(lap2.values()), 4),
         "lap3_total_sec": round(sum(lap3.values()), 4),
         "lap4_total_sec": round(sum(lap4.values()), 4),
         "best_total_sec": round(sum(best.values()), 4),
-        # per-lap detail (sidecar only): lets a regression be classified
-        # as one-lap noise vs real without re-running
+        # per-lap detail: tells one-lap noise from a real change without
+        # a re-run
         "queries_cold": cold,
         "queries_lap2": lap2,
         "queries_lap3": lap3,
         "queries_lap4": lap4,
         "queries_best": best,
-        "drift_controls": drift_controls,
+        "queries_build": build,
+        "drift_controls": {
+            shape: {"query": q, "median_sec": median.get(q)}
+            for shape, q in DRIFT_CONTROLS.items()
+        },
         "round": cur_round,
         "cpus": cpus,
-        "normalized_ratios": normalized_ratios,
-        "normalized_summary": norm_summary,
-        # r8->r9 root cause, chunk_documents_udtf (verdict r8 #3): the
-        # 0.33->1.05 jump was NOT noise — r7's best-of caught a lucky
-        # lap; per-lap sidecars showed ~1.0s in EVERY steady lap.  Two
-        # real causes fixed in r9: the single-file fixture ran the whole
-        # Python lateral hop through ONE task (now repartitioned to
-        # cores before the boundary), and each call registered a fresh
-        # UDTF class (now module-level, once per session).  Steady ~0.7s
-        # remains ~2x the pure-JVM expression twin — that residual IS
-        # the Python-boundary crossing the query exists to demonstrate;
-        # the hot-path form is chunk_documents.
+        "normalized_ratios": ratios,
+        "normalized_summary": summary,
         "notes": {
-            "chunk_documents_udtf": "python-boundary demo; "
-            "expression twin chunk_documents is the hot path",
-            # verdict r8 ask #5 why-not: vs r7's 2.08s best-of, RAG's
-            # ~3.0s median carries the r8 leg-K exactness fix plus ~1s
-            # of per-call plan-build overhead (UDTF-free but 5-table);
-            # r9 cut its CORPUS-sized costs instead — tf aggregates only
-            # query terms, dl is a scan projection, and the vector leg
-            # no longer re-explodes the corpus — the wins that matter at
-            # 100 TB, invisible at a 60k-row fixture where driver-side
-            # plan construction dominates.
-            # r10 measured split (verdict r9 ask #6): warm laps at sf0.1
-            # run ~0.9s python DataFrame construction (py4j round-trips
-            # for the 5-table composed plan), ~0.1s Catalyst
-            # analyze+optimize, ~2.2s execute — build is ~30% of wall,
-            # under the 50% structural-fix threshold, and it is
-            # per-QUERY-BATCH constant: at any corpus scale the same
-            # 1s builds a plan whose execute side grows, so the ratio
-            # only improves with data size.
-            "pipeline_rag_retrieval": "plan-build vs execute split "
-            "measured r10: ~0.9s py4j build / ~0.1s optimize / ~2.2s "
-            "execute at sf0.1 — build <50%, constant per query batch; "
-            "corpus-sized shuffles were cut in r9 (query-term tf, no "
-            "second explode)",
-            # verdict r9 ask #3: the plan-sever tax was reclaimed IN
-            # CODE — severs amortized to every 4th round + exit, and the
-            # function now reuses a caller-owned (src,dst)-bigint edge
-            # cache instead of recast+re-cache (the query's biggest
-            # cached artifact was DUPLICATED).  Same-session A/B at
-            # sf0.1, warm standalone laps: 7.45s before -> 5.96s after.
-            # If this round's bench median reads ABOVE 7.0s, compare
-            # pagerank_part_supplier (untouched since r8) against its
-            # r9 median 5.95s first: in the builder's two r10 bench
-            # runs the whole window ran uniformly 1.2-1.3x r9 (pagerank
-            # 9.37s, 47-query median ratio 1.31, single-thread python
-            # codec queries flat at ~1.0x) — a host-level slowdown
-            # after a VM reboot, not a code regression.
-            # r11 quiet-lap confirmation (verdict r10 ask #2): with the
-            # machine otherwise idle and the untouched control flat
-            # (pagerank 8.74 -> 9.04s, 1.03x), label_prop read
-            # 9.77 -> 8.36s — BELOW the control for the first time
-            # (ratio to control 0.92 vs 1.33 in r9).  The r10 reclaim
-            # is real on the shared catalog lap, not just standalone.
-            "label_prop_communities": "plan-sever amortized (every 4th "
-            "round + exits) and caller's edge cache reused — warm "
-            "standalone A/B at sf0.1: 7.45 -> 5.96s; r11 quiet catalog "
-            "lap confirms: 8.36s vs control 9.04s (ratio 0.92, was "
-            "1.33x control in r9); control query for machine drift: "
-            "pagerank_part_supplier (untouched, r9 median 5.95s)",
-            # verdict r9 ask #4: the r9 cold-lap spike (317 -> 389s)
-            # does NOT reproduce — r10 clean-machine colds: 345s and
-            # 316s on a window whose MEDIANS ran 1.2-1.3x r9 (see
-            # above), i.e. cold is back under ~340s after normalizing.
-            # Cold-minus-median excess is CONCENTRATED, not uniform:
-            # top-10 queries carry ~41s of ~55s (first-touch Python
-            # worker-pool spawn for the codec/phash/IVF families,
-            # datasource registration, stream init); per-query median
-            # excess is 0.05s.  Attribution: r9's cold spike was
-            # ambient co-running noise, the known failure mode — not a
-            # structural first-lap cost introduced by r9's barriers.
-            # r11 (verdict r10 ask #7), measured in two quiet same-boot
-            # laps (control flat at 9.04/9.06s): with only the
-            # mapInPandas worker-pool warmup the cold ratio read 1.165
-            # and s1_datasource_scan still carried +2.9s — Python
-            # DataSources run in their OWN worker classes the pool does
-            # not pre-fork.  Adding the one-page starrysky_paged warmup
-            # removed that entirely (s1 cold excess -0.05s) and brought
-            # the cold ratio to 1.10 (304.2 / 276.7s) — inside the
-            # ~1.15 target.  The remaining excess is per-query
-            # whole-stage-codegen compilation plus first IVF train
-            # (ann_ivf_topk +3.3s) and stream-checkpoint creation
-            # (w1_stream_upsert +3.6s) — first-execution costs a 100 TB
-            # run amortizes to nothing; shaving them would mean warming
-            # codegen per query, i.e. running the catalog twice.
-            "cold_lap": "r11 quiet A/B: worker-pool warmup alone -> "
-            "cold ratio 1.165; + DataSource warmup -> 1.10 "
-            "(s1_datasource_scan cold excess +2.9s -> -0.05s, control "
-            "flat); residual is codegen + first-IVF-train + "
-            "stream-checkpoint, amortized at scale",
-            # r12 (verdict r11 ask #1): quiet re-lap 275.7s median vs
-            # r11's noisy 323.2 (0.85x; cold ratio 1.085).  The r11
-            # outliers adjudicated: phash 7.07 -> 5.23 and udtf
-            # 0.80 -> 0.59 recovered with ZERO code changes (noise
-            # confirmed); for span_dedup/mixture/classifier — still
-            # reading above their r10 medians with the JVM control
-            # flat — a SAME-BOOT A/B ran each standalone 4 laps on the
-            # r10 tree vs HEAD: statistically identical (span warm
-            # 2.0-3.6s vs 1.9-4.0s, mixture 0.76-0.87 vs 0.80-0.85,
-            # classifier 0.92-1.02 vs 0.97-1.43 overlapping), so no
-            # code regression exists on those paths; their elevated
-            # IN-CATALOG readings are boot-level Python-worker drift
-            # plus in-lap context, which the per-shape control basket
-            # (drift_controls) now measures directly instead of
-            # inferring from one JVM-shaped control.
-            "r12_outliers": "same-boot standalone A/B r10-tree vs HEAD "
-            "on span_dedup/mixture/classifier: identical — r11 "
-            "outliers were machine drift, not code; phash and udtf "
-            "recovered untouched (1.55x/1.73x -> 1.07x/1.18x "
-            "control-normalized)",
-            # r14 (verdict r13 ask #2): pagerank_dangling's all-lap r13
-            # elevation (3.96 -> 5.62s) adjudicated by an INTERLEAVED
-            # same-boot standalone A/B, r12 tree (0cfda4f worktree) vs
-            # HEAD, 2 process-runs x 2 laps each per tree, with
-            # pagerank_part_supplier riding as the untouched control.
-            # dangling: r12 tree {5.09, 3.83, 4.76, 3.75} vs HEAD
-            # {5.66, 3.98, 4.58, 7.15} — overlapping ranges (medians
-            # 4.3 vs 5.1, driven by one 7.15 outlier); the CONTROL
-            # itself read {18.80, 8.26, 8.15, 10.76} on the old tree vs
-            # {9.61, 9.49, 10.55, 10.04} on HEAD — +-30% intra-boot
-            # swings on an untouched query, larger than the effect
-            # under test.  topk_per_group_orders: {1.35, 0.57, 0.82,
-            # 0.89} vs {0.60, 0.70, 0.99, 1.07} — identical.
-            # functions/graph.py is byte-identical between the trees,
-            # so no code path differs; attribution: boot-level drift,
-            # consistent with the r11/r12 precedents.
-            "r14_ab": "interleaved same-boot A/B r12-tree vs HEAD: "
-            "pagerank_dangling {5.09,3.83,4.76,3.75} vs "
-            "{5.66,3.98,4.58,7.15}, topk_per_group {1.35,0.57,0.82,"
-            "0.89} vs {0.60,0.70,0.99,1.07}, control swung 8.15-18.80 "
-            "on the OLD tree — overlapping distributions, graph.py "
-            "byte-identical between trees: machine drift, not code",
+            f"r{cur_round:02d}_noise": noise_note(
+                {"cold": cold, "lap2": lap2, "lap3": lap3, "lap4": lap4},
+                median,
+            )
         },
     }
-    # Per-run noise note COMPUTED from the laps shipped in this very
-    # payload (verdict r13 #1: the r13 note hardcoded numbers from a
-    # pre-driver builder lap that contradicted the archived driver
-    # laps beside it).  Quotes: per-lap totals, the flagship's per-lap
-    # spread (first-touch/contention magnet), and the overhead-scalar
-    # control's per-lap ratio to its own median — everything a reader
-    # needs to classify a worst-ratio query as one-lap contention vs
-    # all-lap real, cross-checkable against queries_lap* verbatim.
-    lap_named = {"cold": cold, "lap2": lap2, "lap3": lap3, "lap4": lap4}
-    steady_totals = {
-        n: round(sum(d.values()), 1)
-        for n, d in lap_named.items() if n != "cold"
-    }
-    worst_lap = max(steady_totals, key=steady_totals.get)
-    best_lap = min(steady_totals, key=steady_totals.get)
-    oc_q = DRIFT_CONTROLS["overhead_scalar"]
-    oc_med = median.get(oc_q)
-    oc_laps = {
-        n: (round(d[oc_q] / oc_med, 2) if oc_med and oc_q in d else None)
-        for n, d in lap_named.items() if n != "cold"
-    }
-    flag_laps = {
-        n: d.get("flagship_materialize") for n, d in lap_named.items()
-    }
-    payload["notes"][f"r{cur_round:02d}_noise"] = (
-        f"computed from this run: steady lap totals {steady_totals} "
-        f"(worst {worst_lap} = "
-        f"{round(steady_totals[worst_lap] / steady_totals[best_lap], 2)}x "
-        f"best {best_lap}); flagship per-lap {flag_laps}; "
-        f"overhead control {oc_q} per-lap ratio to its median {oc_laps} "
-        f"— a worst-normalized query elevated only in {worst_lap} is "
-        f"lap contention, elevated in all steady laps is real"
-    )
-    # Round-1 driver capture truncated the wide per-query line
-    # ("parsed": null): full detail goes to stderr + a sidecar file, and
-    # stdout carries exactly ONE compact JSON line, emitted last, after
-    # spark.stop() so no logging can trail it.
     print(json.dumps(payload), file=sys.stderr)
-    with open(full_path, "w") as fh:
+    with open(os.path.join(HERE, "bench_full.json"), "w") as fh:
         json.dump(payload, fh, indent=1)
-    # round-keyed archive (r13): the same full payload, kept per round so
-    # any later round can diff the complete catalog against this one.
-    # Guard (ADVICE r13): if the archive for the inferred round already
-    # exists and was NOT pinned via $SPARK_GRAFT_ROUND, this is a re-lap
-    # after the driver's BENCH write shifted the inference — overwriting
-    # would mislabel the round the next normalization compares against.
-    # Only an explicit env-pinned round may overwrite its own archive.
-    arch_path = os.path.join(here, f"bench_full_r{cur_round:02d}{cpu_tag}.json")
+    # The round archive lets any later round diff the complete catalog
+    # against this one.  An inferred round whose archive already exists
+    # is a re-lap after the round's BENCH write shifted the inference;
+    # only an env-pinned round may overwrite its own archive.
+    arch_path = os.path.join(HERE, f"bench_full_r{cur_round:02d}{cpu_tag}.json")
     if os.path.exists(arch_path) and not env_round:
         print(
             f"bench: {os.path.basename(arch_path)} already exists and "
@@ -583,7 +378,6 @@ def main() -> None:
     else:
         with open(arch_path, "w") as fh:
             json.dump(payload, fh, indent=1)
-    spark.stop()
     compact = {k: payload[k] for k in
                ("metric", "value", "unit", "sf", "cold_total_sec",
                 "lap2_total_sec", "lap3_total_sec", "lap4_total_sec",
@@ -593,8 +387,81 @@ def main() -> None:
         k: median[k] for k in sorted(median, key=median.get, reverse=True)[:5]
     }
     compact["queries_full"] = "bench_full.json"
-    sys.stdout.flush()
-    print(json.dumps(compact), flush=True)
+    return compact
+
+
+def bench_named(spark, queries: dict, names: list, sf_dir: str, laps: int,
+                explain_dir: str | None, suffix: str) -> None:
+    """Named mode: each query alone, so a before/after pair for one change
+    is not polluted by the other queries' debris or by lap order."""
+    for name in names:
+        fn = queries[name]
+        if explain_dir:
+            os.makedirs(explain_dir, exist_ok=True)
+            df = fn(spark, sf_dir)
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted")
+            with open(os.path.join(explain_dir, f"{name}{suffix}.txt"), "w") as fh:
+                fh.write(plan)
+            spark.catalog.clearCache()
+        totals, builds = [], []
+        for _ in range(laps):
+            total, build = run_lap(spark, {name: fn}, sf_dir)
+            totals.append(total[name])
+            builds.append(build[name])
+        med = sorted(totals)[len(totals) // 2] if totals else None
+        print(json.dumps({"query": name, "laps": totals, "median": med,
+                          "build": builds}), flush=True)
+
+
+def main(argv: list | None = None) -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
+    ap.add_argument("queries", nargs="*",
+                    help="catalog queries to time alone, or: lap [label]")
+    ap.add_argument("--laps", type=int, default=None,
+                    help="laps per named query (default 4)")
+    ap.add_argument("--sf", default=sf_dir, help="fixture directory")
+    ap.add_argument("--explain-dir", default=None,
+                    help="write each named query's formatted plan here")
+    ap.add_argument("--suffix", default="",
+                    help="file name suffix for the plans (_before/_after)")
+    args = ap.parse_args(argv)
+    lap_mode = args.queries[:1] == ["lap"]
+    if lap_mode and len(args.queries) > 2:
+        ap.error("lap mode takes at most one label")
+    if (lap_mode or not args.queries) and (
+        args.laps is not None or args.explain_dir or args.suffix
+    ):
+        ap.error("--laps, --explain-dir and --suffix apply to named queries")
+    queries = catalog_queries()
+    if args.queries and not lap_mode:
+        unknown = sorted(set(args.queries) - set(queries))
+        if unknown:
+            ap.error(f"unknown queries: {unknown}")
+
+    spark = start_session(args.sf, cpus)
+    if lap_mode:
+        run_lap(spark, queries, args.sf)  # warm lap, uncounted
+        total, _ = run_lap(spark, queries, args.sf)
+        out = {"label": args.queries[1] if len(args.queries) > 1 else "lap",
+               "lap_total": round(sum(total.values()), 2),
+               "queries": total}
+    elif args.queries:
+        bench_named(spark, queries, args.queries, args.sf,
+                    4 if args.laps is None else args.laps,
+                    args.explain_dir, args.suffix)
+        out = None
+    else:
+        out = bench_catalog(spark, queries, args.sf, cpus)
+    spark.stop()
+    # stdout's last line is the compact JSON, printed after spark.stop()
+    # so no logging can trail it
+    if out is not None:
+        print(json.dumps(out), flush=True)
 
 
 if __name__ == "__main__":

@@ -585,61 +585,15 @@ def _load_extensions() -> None:
     from . import catalog_mixture  # noqa: F401
 
 
-# The external correctness gate verifies EXACTLY the FIRST 50
-# registered queries; _ordered() puts this window first, and
-# tests/test_oracle_parity.py pins len(PRIORITY) == 50 (ADVICE r9
-# flagged a 51-entry window; the committed list counts 50 — the pin
-# keeps it that way).  ROUND-14 ROTATION (VERDICT.md r13 ask #1): the
-# 10-query regression core, then the COMPLETE 30-query r9 bucket
-# (every query whose last driver row is r9 — after this window goes
-# green, no query's last driver row predates r10, sketch_distinct_users
-# excepted, inherently no-oracle), then a 10-query top-up from code r14
-# touches plus the oldest r10 rows: the ACID trio + table_changes_stream
-# (table_format.py review fixes — vacuum now reclaims crashed-staging /
-# tmp-log debris, _stage link retries the vacuum-rmdir race),
-# zorder_skipping_scan (manifest column kinds gate the date-layout
-# padding), bm25_indexed_search (ownership gate re-checked at the
-# stats.json trust point), and the r10-stale multimodal/serving rows
-# (mm_decode_features, mm_frame_sample, mm_metadata_project —
-# multimodal.py/codecs.py/server.py each got a clean-pass adversarial
-# review this round) and w_stream_pattern_match (r10-stale AND
-# r14-touched: the pattern matcher gained the NULL-ts/NULL-id
-# poison-pill guard the module's other operators already had).
-# Rotated OUT with rationale: the full r13 window (all 50 green in
-# r13; profile_documents driver-green r13 and value-exact in every
-# local gate since); s11_feed_catalog deferred to r15 (r10-green,
-# serving.py clean-passed twice, untouched code — displaced by the
-# doubly-qualified pattern-match row).  Changed code outranks stale
-# green; everything else stays value-checked per-round by
-# tools/full_gate.py and tests/test_oracle_parity.py.
-# OPTIMIZATION-ROUND UPDATE (r14): seven rows this round's
-# optimizations touched swap IN (span_dedup_stats — window arg-min
-# rewrite; lm_perplexity_scores — vocab broadcast scalar;
-# dedup_minhash_lsh / dedup_survivors / cross_source_dup_matrix — the
-# cached-signature-table change in functions/dedup.py;
-# w_stream_outer_join — pyarrow sentinels + seed-write removal;
-# w_stream_dedup — seed-write removal), displacing seven UNTOUCHED
-# simple-projection r9 rows (each still value-asserted every round by
-# the local full gate).  Changed code outranks stale green.
-# OPTIMIZATION-ROUND UPDATE (r15, verdict r14 ask #8): the seven
-# displaced r9 simple-projection rows (sample_stratified,
-# split_train_val, seq_length_histogram, rollup_revenue,
-# pivot_segment_priority, contrastive_negatives, vocab_top_terms) and
-# s11_feed_catalog return as promised, and the four rows whose code
-# r15 touched swap IN (label_prop_communities — p1<p2 mirror edge
-# build; pipeline_rag_retrieval / hybrid_rrf_search — single SQL-text
-# plans; bm25_search — query-term-filtered tf aggregate).  The r15
-# dedup/minhash skinny-cache change rides the six already-windowed
-# dedup/minhash rows.  Displaced: twelve UNTOUCHED rows that the r14
-# driver just verified green (a1_salted_count_per_key,
-# chunk_documents_udtf, j1_broadcast_lookup, j4_arrays_overlap,
-# knn_centroid_assign, p12_lang_filter, t2_keyset_page,
-# text_fingerprint, text_lang_id, text_token_count,
-# u3_delete_insert_upsert, u4_cascading_delete) — freshest green,
-# lowest re-verify value, all still value-asserted per round by
-# tools/full_gate.py.
+# The external correctness gate verifies exactly the first 50 registered
+# queries, and _ordered() puts this window first.  It holds the queries
+# whose code changed most recently plus a regression core; every other
+# query is still value-checked by tools/full_gate.py and
+# tests/test_oracle_parity.py.  That test pins len(PRIORITY) == 50 so the
+# window neither spills past the gate nor leaves a slot unused.  Why each
+# row is in the window is recorded in git history, not here.
 PRIORITY: list[str] = [
-    # --- Regression core (multi-round driver-green, highest risk) ---
+    # --- regression core ---
     "flagship_multifeed",
     "w1_stream_upsert",
     "w2_stateful_running_stats",
@@ -650,7 +604,7 @@ PRIORITY: list[str] = [
     "s1_datasource_scan",
     "p11_acl_filter",
     "dedup_exact",
-    # --- r15-touched code paths ---
+    # --- recently changed code paths ---
     "dedup_minhash_lsh",
     "dedup_survivors",
     "cross_source_dup_matrix",
@@ -661,11 +615,11 @@ PRIORITY: list[str] = [
     "lm_perplexity_scores",
     "span_dedup_stats",
     "w_stream_outer_join",
-    # --- same-file prudence (functions/dedup.py changed this round) ---
+    # --- other functions/dedup.py queries ---
     "dedup_containment",
     "dedup_ngram_jaccard",
     "dedup_simhash",
-    # --- r14-touched code paths, kept one more round ---
+    # --- earlier changed code paths ---
     "w_stream_dedup",
     "w_stream_interval_join",
     "acid_table_audit",
@@ -678,7 +632,7 @@ PRIORITY: list[str] = [
     "mm_frame_sample",
     "mm_metadata_project",
     "w_stream_pattern_match",
-    # --- promised returns (displaced in r14, back as pledged) ---
+    # --- simple projections ---
     "sample_stratified",
     "split_train_val",
     "seq_length_histogram",
@@ -687,7 +641,7 @@ PRIORITY: list[str] = [
     "contrastive_negatives",
     "vocab_top_terms",
     "s11_feed_catalog",
-    # --- freshness keeps from the r9 bucket ---
+    # --- longest since last driver check ---
     "ann_cosine_topk",
     "bloom_prefilter_upsert",
     "chunk_documents",

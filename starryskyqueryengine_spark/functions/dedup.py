@@ -76,26 +76,6 @@ def with_shingles(df: DataFrame, text_col: str = "text", out: str = "shingles") 
     )
 
 
-def shingle_hashes(shingle_col: str = "shingles") -> Column:
-    """array<bigint> of base hashes, one per distinct shingle."""
-    return F.transform(F.col(shingle_col), lambda s: md5int(s))
-
-
-def _affine_mod(a: int, b: int):
-    # closure factory: pyspark's higher-order fns inspect lambda arity, so
-    # default-arg captures (lambda h, a=a: ...) would be misread as 2-ary
-    return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MERSENNE_P)
-
-
-def minhash_signature(hash_col: str = "_sh_hash") -> Column:
-    """array<bigint> MinHash signature of length NUM_HASHES."""
-    sig = [
-        F.array_min(F.transform(F.col(hash_col), _affine_mod(a, b)))
-        for a, b in zip(MINHASH_A, MINHASH_B)
-    ]
-    return F.array(*sig)
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -687,28 +667,6 @@ def dedup_survivors(
         F.col("id").alias(id_col)
     )
     return docs.select(id_col).join(doomed, id_col, "left_anti")
-
-
-def simhash_from_hashes(hash_col: Column) -> Column:
-    """32-bit SimHash from an array<bigint> of feature hashes: bit j is
-    set when the majority of feature hashes have bit j set (ties -> 0).
-    Pure array expressions — no UDF."""
-    def vote(j: int):
-        return lambda acc, h: acc + F.when(
-            F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, 1
-        ).otherwise(-1)
-
-    bit_terms = [
-        F.when(
-            F.aggregate(hash_col, F.lit(0).cast("long"), vote(j)) > 0,
-            F.lit(1 << j).cast("long"),
-        ).otherwise(F.lit(0).cast("long"))
-        for j in range(32)
-    ]
-    sig = bit_terms[0]
-    for t in bit_terms[1:]:
-        sig = sig + t
-    return sig
 
 
 def simhash_pairs(

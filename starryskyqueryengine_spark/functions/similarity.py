@@ -192,29 +192,6 @@ def hyperplane_signs_sql(vec_field: str, table: int, n_bits: int, dim: int) -> s
     return "(" + " + ".join(terms) + ")"
 
 
-def hyperplane_signs(vec: Column, table: int, n_bits: int, dim: int) -> Column:
-    """Deterministic random-hyperplane sign bucket (bigint bitmask) for
-    one LSH table; coefficients are literal arrays (see _sign_coeffs).
-
-    NOTE: only usable on a named column — prefer hyperplane_signs_sql
-    when composing many tables (plan-construction cost)."""
-    bits = []
-    for j in range(n_bits):
-        coeff = F.lit(_sign_coeffs(table, j, dim))
-        proj = F.aggregate(
-            F.zip_with(vec, coeff, lambda x, s: x * s),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(
-            F.when(proj > 0, F.lit(1 << j).cast("long")).otherwise(F.lit(0).cast("long"))
-        )
-    out = bits[0]
-    for t in bits[1:]:
-        out = out + t
-    return out
-
-
 def _with_table_buckets(
     df: DataFrame, vec_field: str, n_tables: int, n_bits: int, dim: int
 ) -> DataFrame:

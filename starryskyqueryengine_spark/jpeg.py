@@ -304,14 +304,6 @@ def _blockify(plane: np.ndarray) -> np.ndarray:
     )
 
 
-def _unblockify(blocks: np.ndarray, h: int, w: int) -> np.ndarray:
-    return (
-        blocks.reshape(h // 8, w // 8, 8, 8)
-        .transpose(0, 2, 1, 3)
-        .reshape(h, w)
-    )
-
-
 # ---------------------------------------------------------------------------
 # Encoder
 # ---------------------------------------------------------------------------

@@ -42,10 +42,16 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .schemas import POST_SCHEMA
 
 _COLS = [f.name for f in POST_SCHEMA.fields]
+# A Parquet file read returns every field nullable, so the empty frame of
+# a store with no files must too, or read().schema depends on emptiness.
+_READ_SCHEMA = T.StructType(
+    [T.StructField(f.name, f.dataType, True) for f in POST_SCHEMA.fields]
+)
 
 # Spark/Hive partition-value escaping (ExternalCatalogUtils
 # .escapePathName, verified empirically against this Spark's writer):
@@ -172,7 +178,7 @@ class ParquetPartitionedFormat(TableFormat):
             )
             paths = [d for d in dirs if os.path.isdir(d)]
         if not paths:
-            return spark.createDataFrame([], POST_SCHEMA)
+            return spark.createDataFrame([], _READ_SCHEMA)
         return (
             spark.read.schema(POST_SCHEMA)
             .option("basePath", self.path)

@@ -1,9 +1,32 @@
-"""bench.py round bookkeeping (ADVICE r13): round resolution must not
-mislabel a re-lap run after the driver's BENCH write, and the drift-
-shape classification must be stable across the round pair being
-compared.  Pure helpers — no SparkSession."""
+"""bench.py round bookkeeping: round resolution must not mislabel a
+re-lap run after the round's BENCH write, and the drift-shape
+classification must be stable across the round pair being compared.
+Pure helpers — no SparkSession."""
+
+import os
+import subprocess
+import sys
 
 from bench import resolve_round, shape_of
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_import_bench_starts_no_spark():
+    """Importing the harness (as tests and tools do for its helpers) must
+    not build a session or launch a JVM; only main() does.  Checked in a
+    fresh interpreter, since this one may already hold the test session."""
+    probe = (
+        "import bench\n"
+        "from pyspark import SparkContext\n"
+        "assert SparkContext._gateway is None, 'JVM launched'\n"
+        "assert SparkContext._active_spark_context is None, 'session built'\n"
+    )
+    done = subprocess.run(
+        [sys.executable, "-c", probe], cwd=ROOT, capture_output=True,
+        text=True, timeout=120,
+    )
+    assert done.returncode == 0, done.stderr[-2000:]
 
 
 def test_resolve_round_inference_and_env_pin():

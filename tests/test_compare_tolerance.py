@@ -111,3 +111,15 @@ def test_full_gate_tolerance_band_check():
     # the registered spec stays wired to the one no-hash-oracle query
     assert set(TOLERANCE_CHECKS) == {"sketch_distinct_users"}
     assert all("exact_col" in s for s in TOLERANCE_CHECKS.values())
+
+
+def test_gate_check_applies_tolerance_band_to_sketch_query(spark):
+    """A subset check of the estimate-valued query goes through the same
+    per-query check as the full gate: a tolerance-band verdict against
+    the exact distinct count, not "no-oracle"."""
+    from tests.conftest import SF_SMALL
+    from tools.full_gate import check, open_oracle
+
+    rec = check(spark, open_oracle(SF_SMALL), SF_SMALL, "sketch_distinct_users")
+    assert rec["check"].startswith("tolerance-band"), rec
+    assert rec["values_match"] is True and rec["err"] is None, rec

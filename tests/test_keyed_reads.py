@@ -131,7 +131,7 @@ def test_keyed_pages_equal_filtered_full_read(spark, tmp_path):
     assert _rows(store.read(keys=["k2", "absent", "k2"])) == _rows(
         full.filter(F.col("key") == "k2")
     )
-    assert store.read(keys=["absent"]).dtypes == store.read().dtypes
+    assert store.read(keys=["absent"]).schema == store.read().schema
 
 
 def test_txnlog_keyed_read_equals_filtered_full_read(spark, tmp_path):

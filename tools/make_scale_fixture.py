@@ -22,9 +22,9 @@ a 100 TB table is thousands of files, and a single ~60 MB file would cap
 scan parallelism at one split under the 128 MB default.
 
 This data is NOT used by any correctness gate or by bench.py: it exists so
-the 8-vs-32-core spot-bench (tools/standalone_bench.py with
-SPARK_GRAFT_SF_DIR pointed here) can show whether the shuffle-bound
-queries actually parallelize once real work dominates the per-query floor.
+the 8-vs-32-core spot-bench (``python bench.py q1 q2 ... --sf`` pointed
+here) can show whether the shuffle-bound queries actually parallelize
+once real work dominates the per-query floor.
 
 Usage: python tools/make_scale_fixture.py /root/sf1 [--factor 10]
 """
