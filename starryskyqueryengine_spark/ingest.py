@@ -47,15 +47,12 @@ class IngestJob:
         self.registry = registry
         self.store = store
         # dedup the STATIC profiles dim ONCE at construction, not per
-        # tick: with_author_profiles dedups defensively, so every
-        # run_once used to re-shuffle+sort the whole dim even though it
-        # never changes between ticks (review r9).  The lazy
-        # localCheckpoint materializes the deduped dim on first use and
-        # every later tick re-broadcasts from the checkpoint blocks
-        # (freed at driver GC of the job).
+        # tick: with_author_profiles dedups defensively, so without this
+        # every run_once would re-shuffle+sort a dim that never changes
+        # between ticks.  The lazy localCheckpoint materializes the
+        # deduped dim on first use and every later tick re-broadcasts
+        # from the checkpoint blocks (freed at driver GC of the job).
         if profiles is not None:
-            from .operators.dedup import dedup_within_batch
-
             profiles = dedup_within_batch(profiles, ["did"]).localCheckpoint(
                 eager=False
             )
@@ -130,7 +127,7 @@ class IngestJob:
         # This also makes run_once idempotent under full-batch replay.
         # ONE full-store aggregate per tick: (min indexedAt, count) per
         # key feeds both the floors filter and the init-mode detection
-        # below (previously three separate store scans per run).
+        # below.
         store_stats = (
             self.store.read()
             .groupBy("key")

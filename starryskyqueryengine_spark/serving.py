@@ -4,15 +4,22 @@ Read path of the reference (``src/algos/starrysky.ts:10-84``,
 ``src/methods/feed-generation.ts``, ``src/methods/describe-generator.ts``):
 conditions lookup by recordName -> private-feed ACL -> pinned prepend
 (first page) -> keyset-predicate top-k -> skeleton projection + next
-cursor. Everything per-request is a tiny driver-side plan over one
-key's store partition: the read lists and scans only that key's
-directory, with the schema given rather than inferred, so a request
-runs one Spark job whatever the number of keys in the store; the heavy
-lifting (TakeOrderedAndProject) stays distributed.
+cursor.
+
+A page within the key's newest ``feed_heads.H`` rows is answered on the
+driver from the key's head, which every store commit keeps current: one
+listing of the key's files, a digest and a small file read, no Spark
+job. Any other request (no head, a head for an older listing, or a page
+past the head) runs the keyed plan: a read that lists and scans only
+that key's directory, with the schema given rather than inferred, and a
+distributed top-k (TakeOrderedAndProject) collected as one Spark job.
+``FeedServer.served`` counts which path answered each request.
 """
 
 from __future__ import annotations
 
+import threading
+from collections import Counter
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
@@ -41,6 +48,11 @@ class FeedServer:
         self.spark = spark
         self.registry = registry
         self.store = store
+        # requests per data path: "head" (served from the key's head),
+        # "no_head", "stale" (heads only for other listings) and
+        # "past_head" (the head does not cover the page)
+        self.served = Counter(dict.fromkeys(("head", "no_head", "stale", "past_head"), 0))
+        self._served_lock = threading.Lock()
 
     def get_feed_skeleton(
         self,
@@ -60,20 +72,32 @@ class FeedServer:
         if cond.privateFeed and (requester_did not in cond.privateFeed):
             return FeedPage(feed=[], cursor=None)
 
-        page_df = keyset_page(
-            self.store.read(keys=[cond.key]), cond.key, limit, cursor
-        )
-        rows = page_df.select("uri", "cid", F.unix_micros("indexedAt").alias("us")).collect()
+        path, head = self.store.head(cond.key)
+        rows = head.page(limit, cursor) if head is not None else None
+        if head is not None and rows is None:
+            path = "past_head"
+        with self._served_lock:
+            self.served[path] += 1
+        if rows is None:
+            page_df = keyset_page(
+                self.store.read(keys=[cond.key]), cond.key, limit, cursor
+            )
+            rows = [
+                (r["us"], r["cid"], r["uri"])
+                for r in page_df.select(
+                    "uri", "cid", F.unix_micros("indexedAt").alias("us")
+                ).collect()
+            ]
 
         feed: list[dict] = []
         if cursor is None and cond.pinnedPost:  # T5 first page only
             feed.extend({"post": u} for u in cond.pinnedPost)
-        feed.extend({"post": r["uri"]} for r in rows)
+        feed.extend({"post": uri} for _, _, uri in rows)
 
         next_cursor = None
         if rows:
-            last = rows[-1]  # src/algos/starrysky.ts:75-78
-            next_cursor = encode_cursor(last["us"], last["cid"])
+            us, cid, _ = rows[-1]  # src/algos/starrysky.ts:75-78
+            next_cursor = encode_cursor(us, cid)
         return FeedPage(feed=feed, cursor=next_cursor)
 
     def get_feed_skeleton_authed(

@@ -100,8 +100,12 @@ def table_fingerprint(sf_dir, table: str) -> tuple | None:
 
 def artifact_dir(kind: str, sf_dir, table: str) -> str:
     """Per-uid temp directory for a build-once artifact derived from one
-    fixture table.  The name carries the table's fingerprint, so a
-    regenerated fixture gets a fresh directory instead of stale files.
+    fixture table.  The name is ``starrysky_{kind}_u{uid}_{loc}_{fp}``:
+    ``loc`` hashes the ``(sf_dir, table)`` it derives from, ``fp`` the
+    table's fingerprint, so a regenerated fixture gets a fresh directory
+    instead of stale files.  When a fingerprint is first resolved, this
+    uid's directories for older fingerprints of the same kind and table
+    are removed, so a regenerated fixture leaves no orphans behind.
     The temp dir is shared and world-writable: the uid in the name keeps
     users apart, and ``assert_owned`` refuses a directory another uid
     planted at the predictable path.  Callers run ``assert_owned`` again
@@ -109,13 +113,23 @@ def artifact_dir(kind: str, sf_dir, table: str) -> str:
     MANIFEST) is believed to mean a complete artifact."""
     import hashlib
     import os
+    import shutil
     import tempfile
 
-    fp = table_fingerprint(sf_dir, table)
-    tag = hashlib.md5(f"{sf_dir}|{fp}".encode()).hexdigest()[:12]
+    def digest(s: str) -> str:
+        return hashlib.md5(s.encode()).hexdigest()[:8]
+
     uid = os.getuid() if hasattr(os, "getuid") else 0
-    path = os.path.join(tempfile.gettempdir(), f"starrysky_{kind}_u{uid}_{tag}")
+    prefix = f"starrysky_{kind}_u{uid}_{digest(f'{sf_dir}|{table}')}_"
+    name = prefix + digest(repr(table_fingerprint(sf_dir, table)))
+    tmp = tempfile.gettempdir()
+    path = os.path.join(tmp, name)
     assert_owned(path)
+    if not os.path.exists(path):
+        for old in os.listdir(tmp):
+            if old.startswith(prefix) and old != name:
+                assert_owned(os.path.join(tmp, old))
+                shutil.rmtree(os.path.join(tmp, old), ignore_errors=True)
     return path
 
 

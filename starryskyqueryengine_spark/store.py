@@ -24,6 +24,16 @@ extra dependencies), or a Delta/Iceberg-backed adapter on a real
 deployment, where every mutation becomes one ACID statement — the
 mapping (MERGE / REPLACE WHERE / DELETE / OPTIMIZE) is documented in
 ``table_format.py``.
+
+Every commit also keeps a *head* for each key it touches: the key's
+newest rows in serving order, written on the driver at commit time and
+named by a digest of the key's live file listing (``feed_heads.py``).
+Serving answers a page from the head when the listing still matches and
+the head covers the page; every other request runs the keyed Spark plan.
+A head is derived from the old one (upsert merges in the batch's own
+head, retention and refresh cut, CDC deletes filter, compaction
+re-stamps), so a steady commit runs no extra Spark job; a key without a
+valid old head is rebuilt by one keyed top-k job.
 """
 
 from __future__ import annotations
@@ -31,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import feed_heads
 from .operators.dedup import dedup_within_batch, new_rows_anti_join
 from .operators.retention import refresh_delete, retain_latest
 from .schemas import POST_SCHEMA
@@ -64,6 +75,59 @@ class PostStore:
     def count_by_key(self) -> DataFrame:
         """A1 (src/subscription.ts:183-189)."""
         return self.read().groupBy("key").agg(F.count("*").alias("n"))
+
+    # -- heads --------------------------------------------------------------
+
+    def _head_at(self, key: str) -> tuple[str | None, str, feed_heads.Head | None]:
+        """(token, state, head) for the key's live files; the token is
+        None when the format does not list files (no heads)."""
+        files = self.fmt.key_files(key)
+        if files is None:
+            return None, "no_head", None
+        tok = feed_heads.token(files)
+        if not files:  # a key with no files has the empty whole head
+            return tok, "head", feed_heads.EMPTY
+        return (tok, *feed_heads.load(self.path, key, tok))
+
+    def head(self, key: str) -> tuple[str, feed_heads.Head | None]:
+        """``("head", head)`` when the key's head matches its live files;
+        otherwise ``("stale", None)`` or ``("no_head", None)``."""
+        return self._head_at(key)[1:]
+
+    def _heads_before(self, keys) -> dict | None:
+        """(token, head or None) of each key, read before a commit while
+        the token still names the pre-commit files."""
+        out = {k: self._head_at(k) for k in keys}
+        if any(tok is None for tok, _, _ in out.values()):
+            return None
+        return {k: (tok, h) for k, (tok, _, h) in out.items()}
+
+    def _heads_after(self, before: dict | None, derive) -> None:
+        """Write the head of each key in ``before`` after a commit:
+        ``derive(key, old_head)`` gives it from the old head (None:
+        unknown, the key stays headless); a key whose old head was
+        missing is rebuilt, all of them by one keyed job."""
+        if before is None:
+            return
+        rebuild = {}
+        for k, (old_tok, old) in before.items():
+            files = self.fmt.key_files(k)
+            tok = feed_heads.token(files)
+            if tok == old_tok:  # nothing landed (a replayed txn append)
+                continue
+            if files and old is None:
+                rebuild[k] = tok
+                continue
+            new = derive(k, old) if files else None  # an empty key needs none
+            if new is None:
+                feed_heads.drop(self.path, k)
+            else:
+                feed_heads.write(self.path, k, tok, new)
+        if rebuild:
+            top = feed_heads.top_rows(self.read(keys=list(rebuild))).collect()
+            built = feed_heads.from_top(top)[1]
+            for k, tok in rebuild.items():
+                feed_heads.write(self.path, k, tok, built.get(k, feed_heads.EMPTY))
 
     # -- write --------------------------------------------------------------
 
@@ -120,11 +184,16 @@ class PostStore:
                     return {}
                 stored = self.read(keys=keys)
                 batch = new_rows_anti_join(deduped, stored, ["uri", "key"]).cache()
-            inserted = {
-                r["key"]: r["n"]
-                for r in batch.groupBy("key").agg(F.count("*").alias("n")).collect()
-            }
+            # one job gives both the inserted count and the batch's own
+            # head per key, which the new heads are merged from
+            inserted, batch_heads = feed_heads.from_top(
+                feed_heads.top_rows(batch).collect()
+            )
+            before = self._heads_before(inserted)
             self._append(batch, txn=txn)
+            self._heads_after(
+                before, lambda k, old: feed_heads.merge(old, batch_heads[k])
+            )
             return inserted
         finally:
             deduped.unpersist()
@@ -162,6 +231,7 @@ class PostStore:
         over_keys = [r["key"] for r in over.collect()]  # one row per feed key
         if not over_keys:
             return
+        before = self._heads_before(over_keys)
         affected = stored.filter(F.col("key").isin(over_keys))
         # cache: overwrite_partitions consumes this plan twice (its
         # written-keys collect + the write itself) — without the cache
@@ -174,6 +244,9 @@ class PostStore:
             self._overwrite_keys(kept, expected_keys=over_keys)
         finally:
             kept.unpersist()
+        self._heads_after(
+            before, lambda k, old: feed_heads.retained(old, limit_by_key[k])
+        )
 
     def apply_refresh(self, key: str, refresh: int) -> None:
         """T4: drop the N newest rows for key (or all rows for -1)."""
@@ -182,8 +255,10 @@ class PostStore:
         if refresh == -1:
             self.delete_key(key)
             return
+        before = self._heads_before([key])
         remaining = refresh_delete(self.read_key(key), refresh, key)
         self._overwrite_keys(remaining, expected_keys=[key])
+        self._heads_after(before, lambda k, old: feed_heads.refreshed(old, refresh))
 
     def delete_rows(self, doomed: DataFrame) -> None:
         """W6 CDC delete-apply: remove specific (uri, key) rows by
@@ -191,11 +266,16 @@ class PostStore:
         if not self.exists():
             return
         doomed = doomed.select("uri", "key").distinct()
-        keys = [r["key"] for r in doomed.select("key").distinct().collect()]
-        if not keys:
+        uris: dict[str, set] = {}
+        for r in doomed.collect():  # the doomed URIs also trim the heads
+            uris.setdefault(r["key"], set()).add(r["uri"])
+        if not uris:
             return
+        keys = list(uris)
+        before = self._heads_before(keys)
         remaining = self.read(keys=keys).join(doomed, ["uri", "key"], "left_anti")
         self._overwrite_keys(remaining, expected_keys=keys)
+        self._heads_after(before, lambda k, old: feed_heads.without(old, uris[k]))
 
     def file_counts(self) -> dict[str, int]:
         """Data files per key partition (compaction signal)."""
@@ -213,6 +293,7 @@ class PostStore:
         ]
         if not fragmented:
             return []
+        before = self._heads_before(fragmented)
         affected = self.read(keys=fragmented)
         # hash-repartition by key -> one writer task (one file) per key;
         # a pathologically hot key would add a salt column here to split
@@ -224,6 +305,8 @@ class PostStore:
             affected.repartition(len(fragmented), "key")
             .sortWithinPartitions("key", F.col("indexedAt").desc(), F.col("cid").desc())
         )
+        # same rows in new files: the old heads hold under the new tokens
+        self._heads_after(before, lambda k, old: old)
         return fragmented
 
     @staticmethod
@@ -244,3 +327,4 @@ class PostStore:
     def delete_key(self, key: str) -> None:
         """U4 cascade: remove the key's partition entirely."""
         self.fmt.delete_partition(key)
+        feed_heads.drop(self.path, key)

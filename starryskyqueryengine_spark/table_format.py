@@ -125,6 +125,13 @@ class TableFormat:
         native compaction may return {}."""
         raise NotImplementedError
 
+    def key_files(self, key: str) -> list[str] | None:
+        """The live data files of one RAW key, as a sorted list of names
+        that changes on every commit to the key ([] when it has none).
+        Feed heads are keyed by a digest of it (see ``feed_heads``);
+        None means "no listing", and the store then keeps no heads."""
+        return None
+
 
 class ParquetPartitionedFormat(TableFormat):
     """Default sandbox implementation: ``key``-partitioned vanilla
@@ -219,6 +226,15 @@ class ParquetPartitionedFormat(TableFormat):
             import shutil
 
             shutil.rmtree(part_dir)
+
+    def key_files(self, key: str) -> list[str]:
+        # what Spark's file index reads: every entry not hidden by "." or "_"
+        part_dir = os.path.join(self.path, f"key={escape_partition_value(key)}")
+        try:
+            names = os.listdir(part_dir)
+        except FileNotFoundError:
+            return []
+        return sorted(n for n in names if not n.startswith((".", "_")))
 
     def file_counts(self) -> dict[str, int]:
         out: dict[str, int] = {}
@@ -1158,6 +1174,11 @@ class TxnLogFormat(TableFormat):
             self._commit(
                 "delete", [], remove_keys={escape_partition_value(key)}
             )
+
+    def key_files(self, key: str) -> list[str]:
+        # the log's key fields are in the ESCAPED (on-disk) form
+        esc = escape_partition_value(key)
+        return sorted(p for p, k in self._snapshot().items() if k == esc)
 
     def file_counts(self) -> dict[str, int]:
         out: dict[str, int] = {}

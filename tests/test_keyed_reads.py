@@ -74,7 +74,9 @@ def test_numeric_looking_keys_stay_strings(spark, tmp_path):
 def test_feed_skeleton_runs_one_job_above_discovery_threshold(spark, tmp_path):
     """40 keys is above parallelPartitionDiscovery.threshold (32): a
     whole-store listing would run its own listing job, and schema
-    inference another. A key-scoped read runs only the page's job."""
+    inference another. A key-scoped read runs only the page's job.
+    The rows are written through ``fmt.append``, not ``PostStore``, so
+    no key has a head and every page takes the Spark fallback."""
     keys = [f"k{i:02d}" for i in range(40)]
     store = PostStore(spark, str(tmp_path / "s"))
     for b in range(2):  # two files per key

@@ -129,6 +129,32 @@ def test_zorder_cache_refuses_foreign_owned_dir(monkeypatch, tmp_path):
         ca.zorder_skipping_scan(None, SF_DIR)
 
 
+def test_artifact_dir_removes_older_fingerprints(monkeypatch, tmp_path):
+    """A regenerated fixture resolves to a new directory, and the
+    directory of its older fingerprint is removed; artifacts of another
+    table stay."""
+    import tempfile
+
+    from starryskyqueryengine_spark.sources.fixtures import artifact_dir
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    os.makedirs(tempfile.tempdir)
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    (sf / "lineitem.parquet").write_bytes(b"v1")
+    (sf / "orders.parquet").write_bytes(b"v1")
+    old = artifact_dir("zorder", str(sf), "lineitem")
+    other = artifact_dir("zorder", str(sf), "orders")
+    os.makedirs(old)
+    os.makedirs(other)
+    assert artifact_dir("zorder", str(sf), "lineitem") == old  # same fingerprint
+    assert os.path.isdir(old)
+    (sf / "lineitem.parquet").write_bytes(b"v2, regenerated")
+    new = artifact_dir("zorder", str(sf), "lineitem")
+    assert new != old and not os.path.exists(old)
+    assert os.path.isdir(other)
+
+
 def test_manifest_builds_in_one_scan_not_per_file(spark, tmp_path):
     """The stats pass must be ONE groupBy(input_file_name()) job — a
     read.parquet(file) loop per written file is a driver-side job storm
