@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from .catalog import register
 from .functions import similarity as sim
-from .sources.fixtures import load_table, table_fingerprint
+from .sources.fixtures import artifact_dir, assert_owned, load_table, memo_by_fingerprint
 
 ANN_K = 10
 ANN_NUM_QUERIES = 5  # vec_id < 5 are the query vectors
@@ -68,15 +68,9 @@ def embedding_near_dup(spark, sf_dir):
 # notebook reuse) amortize the k-means build and measure the
 # steady-state probe cost. Deterministic training => the cached matrix
 # is identical to a fresh fit; correctness runs in a fresh process are
-# unaffected. The key normalizes str/Path callers AND fingerprints the
-# underlying parquet (mtime+size), so a regenerated dataset under the
-# same path invalidates the entry instead of serving stale centroids.
-_IVF_CENTROIDS: dict[tuple, object] = {}
-
-
-def _ivf_cache_key(sf_dir) -> tuple:
-    # a non-local path (e.g. object store) has no fingerprint: path-only key
-    return (str(sf_dir), table_fingerprint(sf_dir, "embeddings"))
+# unaffected. One entry per sf_dir, replaced when the embeddings
+# fixture's fingerprint changes.
+_IVF_CENTROIDS: dict[str, tuple] = {}
 
 
 @register("ann_ivf_topk", None)  # oracle attached below (needs IVF_* consts)
@@ -95,11 +89,10 @@ def ann_ivf_topk(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < ANN_NUM_QUERIES)
     base = emb.filter(F.col("vec_id") >= ANN_NUM_QUERIES)
-    key = _ivf_cache_key(sf_dir)
-    C = _IVF_CENTROIDS.get(key)
-    if C is None:
-        C = sim.kmeans_fit_exact(base, IVF_CELLS, iters=2)
-        _IVF_CENTROIDS[key] = C
+    C = memo_by_fingerprint(
+        _IVF_CENTROIDS, sf_dir, "embeddings",
+        lambda: sim.kmeans_fit_exact(base, IVF_CELLS, iters=2),
+    )
     return sim.ivf_topk(queries, base, ANN_K, n_centroids=IVF_CELLS,
                         n_probe=IVF_PROBE, centroids=C)
 
@@ -445,51 +438,29 @@ def ann_ivf_fixed_topk(spark, sf_dir):
                         n_probe=IVF_PROBE, train_iters=0)
 
 
-def _ivf_index_table(spark, sf_dir) -> str:
-    """Build (once per dataset fingerprint per warehouse) the persisted
-    cell-bucketed IVF index for the embeddings table; returns its name.
-    The fingerprint in the table name invalidates stale indexes the
-    same way the in-process centroid cache key does."""
-    import hashlib
-
-    key = _ivf_cache_key(sf_dir)
-    tag = hashlib.md5(repr(key).encode()).hexdigest()[:12]
-    table = f"ivf_idx_{tag}"
-    if not spark.catalog.tableExists(table):
-        # a FRESH Spark process has an empty in-memory metastore, but the
-        # warehouse directory survives on disk from earlier processes;
-        # saveAsTable refuses to adopt an orphaned location
-        # (LOCATION_ALREADY_EXISTS), so clear stale cache dirs first —
-        # the index is a rebuildable artifact, never source data
-        import os
-        import shutil
-
-        wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        wh = wh.removeprefix("file:")
-        for t in (table, f"{table}_centroids"):
-            loc = os.path.join(wh, t)
-            if os.path.isdir(loc):
-                shutil.rmtree(loc, ignore_errors=True)
-        emb = load_table(spark, sf_dir, "embeddings")
-        base = emb.filter(F.col("vec_id") >= ANN_NUM_QUERIES)
-        sim.ivf_build_index(base, table, n_centroids=IVF_CELLS, train_iters=0)
-    return table
-
-
 @register("ann_ivf_indexed_topk", _ivf_fixed_oracle())
 def ann_ivf_indexed_topk(spark, sf_dir):
-    """IVF probe against the PERSISTED bucketed-by-cell index — the
-    serve half of build-once/serve-many (ivf_build_index /
-    ivf_probe_index). Identical fixed centroids and probe parameters to
+    """IVF probe against the STORED cell-partitioned index — the serve
+    half of build-once/serve-many (ivf_build_index / ivf_probe_index).
+    Identical fixed centroids and probe parameters to
     ann_ivf_fixed_topk, so the same DuckDB oracle value-checks it; the
-    difference is the plan: the base side is a bucket-pruned scan of
-    the stored inverted lists (SelectedBucketsCount n_probed of
-    IVF_CELLS — pinned in tests/test_plan_shapes.py), with NO base-side
-    re-assignment pass on repeat probes."""
-    table = _ivf_index_table(spark, sf_dir)
+    difference is the plan: the base side is a scan of the stored
+    inverted lists with PartitionFilters on the probed cells (pinned in
+    tests/test_plan_shapes.py), with NO base-side re-assignment pass.
+    The index is built on first use per dataset fingerprint in a
+    per-uid, ownership-gated artifact directory."""
+    import os
+
+    path = artifact_dir("ivf", sf_dir, "embeddings")
+    # trust point: the manifest is what makes us serve the lists, so a
+    # directory planted after artifact_dir ran is refused here too
+    assert_owned(path)
     emb = load_table(spark, sf_dir, "embeddings")
+    if not os.path.exists(os.path.join(path, sim.IVF_MANIFEST)):
+        base = emb.filter(F.col("vec_id") >= ANN_NUM_QUERIES)
+        sim.ivf_build_index(base, path, n_centroids=IVF_CELLS)
     queries = emb.filter(F.col("vec_id") < ANN_NUM_QUERIES)
-    return sim.ivf_probe_index(queries, table, ANN_K, n_probe=IVF_PROBE)
+    return sim.ivf_probe_index(queries, path, ANN_K, n_probe=IVF_PROBE)
 
 
 # --------------------------------------------------------------------------

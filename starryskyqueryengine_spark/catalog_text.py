@@ -21,7 +21,7 @@ from .sources.fixtures import (
     artifact_dir,
     assert_owned,
     load_table,
-    table_fingerprint,
+    memo_by_fingerprint,
 )
 
 _QUALITY_PAT = r"\b(" + "|".join(tx.QUALITY_STOPWORDS) + r")\b"
@@ -1052,7 +1052,7 @@ def bm25_indexed_search(spark, sf_dir):
     return idx.probe(BM25_QUERY_TERMS, BM25_TOP_K)
 
 
-_BPE_MERGES_CACHE: dict = {}
+_BPE_MERGES_CACHE: dict[str, tuple] = {}
 BPE_TRAIN_DOCS = 200
 BPE_N_MERGES = 256
 
@@ -1060,14 +1060,13 @@ BPE_N_MERGES = 256
 def _bpe_merges_for(spark, sf_dir):
     """Train-once-per-dataset BPE merge table (build once, serve many,
     like the IVF centroids): deterministic bounded sample — the first
-    BPE_TRAIN_DOCS docs by doc_id — trained driver-side. Keyed on
-    (sf_dir, table fingerprint) like every fixture-derived artifact: a
-    regenerated documents.parquet under the same path trains fresh
-    merges instead of serving the old corpus's table."""
+    BPE_TRAIN_DOCS docs by doc_id — trained driver-side. Memoized per
+    sf_dir under the table fingerprint like every fixture-derived
+    artifact: a regenerated documents.parquet under the same path
+    trains fresh merges and replaces the old corpus's table."""
     from .functions.bpe import train_bpe
 
-    key = (str(sf_dir), table_fingerprint(sf_dir, "documents"))
-    if key not in _BPE_MERGES_CACHE:
+    def train():
         sample = [
             r["text"] or ""
             for r in load_table(spark, sf_dir, "documents")
@@ -1076,8 +1075,9 @@ def _bpe_merges_for(spark, sf_dir):
             .orderBy("doc_id")
             .collect()
         ]
-        _BPE_MERGES_CACHE[key] = train_bpe(sample, n_merges=BPE_N_MERGES)
-    return _BPE_MERGES_CACHE[key]
+        return train_bpe(sample, n_merges=BPE_N_MERGES)
+
+    return memo_by_fingerprint(_BPE_MERGES_CACHE, sf_dir, "documents", train)
 
 
 @register(

@@ -3,7 +3,7 @@ so that a first page (and the next few) is served without a Spark job.
 
 The reference serves ``getFeedSkeleton`` with one SQLite ``LIMIT`` read.
 Here a head is a small Parquet file holding one key's newest ``H`` rows
-in serving order (``indexedAt DESC, cid DESC``, NULLs last, exactly as
+in serving order (``indexedAt DESC, cid DESC``, exactly as
 :func:`.operators.topk.keyset_page` orders them) plus a ``whole_key``
 flag. It is written at commit time by :class:`.store.PostStore` and read
 on the driver by :class:`.serving.FeedServer`; any request a head cannot
@@ -52,11 +52,11 @@ HEADS_DIR = "_heads"
 
 def _order(row: tuple) -> tuple:
     """Sort key of a ``(us, cid, uri)`` row; sorted with ``reverse=True``
-    it gives serving order: newest first, NULL ``indexedAt`` and NULL
-    ``cid`` last. Python ``str`` order is code-point order, which is the
-    UTF-8 byte order Spark compares strings in."""
-    us, cid = row[0], row[1]
-    return (us is not None, us or 0, cid is not None, cid or "")
+    it gives serving order, newest first. Python ``str`` order is
+    code-point order, which is the UTF-8 byte order Spark compares
+    strings in. ``PostStore.upsert`` stores no row with a NULL
+    ``indexedAt`` or ``cid``."""
+    return row[0], row[1]
 
 
 @dataclass(frozen=True)
@@ -67,18 +67,11 @@ class Head:
     def page(self, limit: int, cursor: str | None) -> list[tuple] | None:
         """The page ``keyset_page`` would return, or None when the head
         cannot tell it (fewer than ``limit`` rows after the cursor and
-        not the whole key). The cursor predicate is the Spark one,
-        NULLs included: a NULL ``indexedAt`` never passes, a NULL
-        ``cid`` passes only on an older ``indexedAt``."""
+        not the whole key). The cursor predicate is the Spark one."""
         rows = self.rows
         if cursor:
-            c_us, c_cid = parse_cursor(cursor)
-            rows = [
-                r
-                for r in rows
-                if r[0] is not None
-                and (r[0] < c_us or (r[0] == c_us and r[1] is not None and r[1] < c_cid))
-            ]
+            c = parse_cursor(cursor)
+            rows = [r for r in rows if _order(r) < c]
         if len(rows) < limit and not self.whole:
             return None
         return list(rows[:limit])

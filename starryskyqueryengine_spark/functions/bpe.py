@@ -84,115 +84,6 @@ def train_bpe(texts, n_merges: int = 256) -> list[tuple[bytes, bytes]]:
     return merges
 
 
-def train_bpe_spark(df, text_col: str, n_merges: int = 256):
-    """Distributed BPE training: identical merge list to :func:`train_bpe`
-    on the same texts (same counts, same lowest-pair tie-break), but the
-    per-round pair counting runs as a Spark aggregate over the DISTINCT
-    word-frequency table — so the training sample can rise from a
-    driver-bounded cap to corpus scale.
-
-    Shape per round (all JVM-side, no Python in the loop body):
-
-    - pair counts: one ``transform``-explode over the cached
-      (freq, seq) table + one map-side-combinable sum — the only
-      shuffle, keyed on the pair;
-    - best pair: ``min(struct(-cnt, a, b))`` — a scalar aggregate
-      (count DESC then lexicographically smallest pair; Spark's
-      unsigned-byte binary ordering == Python ``bytes`` ordering), one
-      driver row per round, never a data collect;
-    - merge application: a fold (``F.aggregate``) over each symbol
-      array — ``aaa`` + merge (a,a) correctly yields ``[aa, a]``
-      because after a merge the accumulator tail is ``ab``, not ``a``;
-    - per-round cache with deferred unpersist truncates the lineage
-      (same discipline as the graph loops).
-
-    The working set is the distinct-word table, NOT the corpus: at 100
-    TB of text the distinct pretoken vocabulary is millions of rows,
-    so 256 rounds over it are cheap while the one corpus-sized job is
-    the initial pretoken count."""
-    from pyspark.sql import functions as F
-
-    import pandas as pd
-
-    def pretok(batches):
-        for pdf in batches:
-            c: Counter = Counter()
-            for t in pdf[text_col]:
-                c.update(_pretoken_words(t or ""))
-            if c:
-                yield pd.DataFrame(
-                    {"word": list(c.keys()), "freq": list(c.values())}
-                )
-
-    wf = (
-        df.select(text_col)
-        .mapInPandas(pretok, "word binary, freq long")
-        .groupBy("word")
-        .agg(F.sum("freq").alias("freq"))
-    )
-    # symbol sequence = array of 1-byte binaries (substring is
-    # byte-indexed on BinaryType)
-    seqs = wf.select(
-        "freq",
-        F.expr(
-            "transform(sequence(1, length(word)), i -> substring(word, i, 1))"
-        ).alias("seq"),
-    ).cache()
-
-    # adjacent pairs; guarded so 1-symbol words yield an empty array
-    # (sequence(1, 0) would DESCEND, not return empty)
-    pair_expr = F.expr(
-        "case when size(seq) < 2 then array() else "
-        "transform(sequence(1, size(seq) - 1), "
-        "i -> struct(element_at(seq, i) as a, element_at(seq, i + 1) as b)) "
-        "end"
-    )
-
-    merges: list[tuple[bytes, bytes]] = []
-    retired = None  # previous round's cache, safe to drop post-collect
-    for _ in range(n_merges):
-        best = (
-            seqs.select("freq", F.explode(pair_expr).alias("p"))
-            .groupBy("p.a", "p.b")
-            .agg(F.sum("freq").alias("cnt"))
-            .agg(
-                F.min(
-                    F.struct((-F.col("cnt")).alias("nc"), F.col("a"), F.col("b"))
-                ).alias("best")
-            )
-            .collect()[0]["best"]
-        )
-        # the collect materialized this round's cache -> parent can go
-        if retired is not None:
-            retired.unpersist()
-            retired = None
-        if best is None or -best["nc"] < 2:
-            break
-        a, b = bytes(best["a"]), bytes(best["b"])
-        merges.append((a, b))
-        ab = a + b
-        new_seqs = seqs.select(
-            "freq",
-            F.aggregate(
-                "seq",
-                F.expr("cast(array() as array<binary>)"),
-                # F.get is 0-based and NULL-safe on the empty accumulator
-                # (element_at would raise under ANSI mode)
-                lambda acc, x: F.when(
-                    (F.get(acc, F.size(acc) - 1) == F.lit(a)) & (x == F.lit(b)),
-                    F.concat(
-                        F.slice(acc, F.lit(1), F.size(acc) - 1), F.array(F.lit(ab))
-                    ),
-                ).otherwise(F.concat(acc, F.array(x))),
-            ).alias("seq"),
-        ).cache()
-        retired, seqs = seqs, new_seqs
-    seqs.unpersist()
-    if retired is not None:
-        retired.unpersist()
-    return merges
-
-
 def bpe_encode(
     text: str,
     merges: list[tuple[bytes, bytes]],

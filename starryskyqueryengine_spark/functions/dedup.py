@@ -740,10 +740,8 @@ class NearDupGate:
     signature pass plus one equi-join against the store.
 
     Scale shape: the store holds LSH_BANDS rows per admitted doc (ids +
-    two small keys, no text); the probe is a broadcast- or
-    bucket-joinable equi-join on (band, band_sig).  At 100 TB the store
-    is written bucketed by band_sig so batch probes co-locate without a
-    store-side shuffle (operators/bucketed.py pattern).  Idempotent
+    two small keys, no text); the probe is an equi-join on (band,
+    band_sig), broadcast while the store is small.  Idempotent
     replay: re-admitting an already-admitted doc_id flags itself via its
     own stored bands, so crashed-and-retried batches do not duplicate
     (same property PostStore.upsert gives the serving store).

@@ -8,11 +8,19 @@ columnar, no Python UDF in the hot path.
 Scale notes (100 TB): brute-force is a broadcast of the (small) query set
 against the base table — linear scan, perfectly parallel, no shuffle; the
 LSH variant buckets base vectors by sign-pattern so each query probes only
-its bucket (candidate reduction ~2^bits), at some recall cost. An IVF
-variant would replace the hash with learned centroids — same join shape.
+its bucket (candidate reduction ~2^bits), at some recall cost. The IVF
+variants replace the hash with centroids — same join shape — either at
+scan time (``ivf_topk``) or from a stored index directory
+(``ivf_build_index``/``ivf_probe_index``).
 """
 
 from __future__ import annotations
+
+import contextlib
+import json
+import os
+import shutil
+import uuid
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -325,7 +333,7 @@ def kmeans_fit_exact(
       (``floor(x/|v| * quant + 0.5)``).
     - Assignment ranks cosine(quantized member, centroid) ROUNDED to 6
       decimals with ties to the lower centroid rank — the same
-      comparator ``_cell_assigner`` and the SQL oracles use, so the
+      comparator ``_assign_cells`` and the SQL oracles use, so the
       ~1e-16 cross-engine float noise washes out.
     - The new centroid is the EXACT per-dimension int64 sum of its
       members' quantized vectors: cosine is scale-invariant, so the
@@ -342,7 +350,7 @@ def kmeans_fit_exact(
     beyond ~4e12 rows/cell swap the sum to DECIMAL(38,0).
 
     Returns a ``(k, dim)`` float64 matrix of L2-normalized centroids
-    (the integer directions, normalized for ``_cell_assigner``'s
+    (the integer directions, normalized for ``_assign_cells``'s
     dot-product form).
     """
     import numpy as np
@@ -450,15 +458,18 @@ def _ivf_fixed_init(base: DataFrame, n_centroids: int, id_col: str, vec_col: str
     return C
 
 
-def _cell_assigner(bc, id_col: str, vec_col: str, n_cells: int):
-    """Arrow-batched nearest-centroid(s) assignment against a broadcast
-    L2-normalized centroid matrix. Rounds cosines to 6 decimals and
-    stable-sorts so ties break toward the lower centroid index (matches
-    the DuckDB oracle's ORDER BY ROUND(sim,6) DESC, crank ASC)."""
+def _assign_cells(df: DataFrame, C, n_cells: int, id_col: str, vec_col: str) -> DataFrame:
+    """Tag each ``(id, vec)`` row with its ``n_cells`` nearest centroids
+    of the L2-normalized matrix ``C``, one output row per cell, in one
+    Arrow-batched pass against a broadcast copy of ``C``. Rounds cosines
+    to 6 decimals and stable-sorts so ties break toward the lower
+    centroid index (matches the DuckDB oracle's ORDER BY ROUND(sim,6)
+    DESC, crank ASC)."""
+    import numpy as np
+
+    bc = df.sparkSession.sparkContext.broadcast(np.asarray(C, dtype=np.float64))
 
     def run(batches):
-        import numpy as np
-
         Cn = bc.value
         for pdf in batches:
             if not len(pdf):
@@ -476,7 +487,9 @@ def _cell_assigner(bc, id_col: str, vec_col: str, n_cells: int):
             out["cell"] = order.ravel()
             yield out[[id_col, vec_col, "cell"]]
 
-    return run
+    return df.select(id_col, vec_col).mapInPandas(
+        run, schema=f"{id_col} long, {vec_col} array<float>, cell int"
+    )
 
 
 def _ivf_score(
@@ -543,14 +556,11 @@ def ivf_topk(
     base ids — fatal at 100 TB). No RNG, reproducible across runs and
     partitionings; ``train_iters > 0`` refines that init with
     distributed Lloyd k-means (``kmeans_fit``) for tighter cells at the
-    same plan shape. Scale shape: the centroid table is
-    broadcast (tiny); the base is written bucketed by ``cell`` so the
-    probe join is co-located; a query touches n_probe/n_centroids of
-    the data instead of all of it.
+    same plan shape. Scale shape: the centroid matrix is broadcast
+    (tiny), the base is cell-tagged in one linear pass, and the
+    broadcast probe set joins it on ``cell``; a query scores
+    n_probe/n_centroids of the data instead of all of it.
     """
-    import numpy as np
-
-    spark = base.sparkSession
     if centroids is not None:
         # Precomputed index: the production path — an IVF index is
         # trained once and served many times; callers that amortize the
@@ -564,127 +574,10 @@ def ivf_topk(
                        id_col=id_col, vec_col=vec_col)
     else:
         C = _ivf_fixed_init(base, n_centroids, id_col, vec_col)
-    bc = spark.sparkContext.broadcast(np.asarray(C, dtype=np.float64))
-
-    schema = f"{id_col} long, {vec_col} array<float>, cell int"
-    b_cells = ensure_parallelism(base.select(id_col, vec_col)).mapInPandas(
-        _cell_assigner(bc, id_col, vec_col, 1), schema=schema
+    b_cells = _assign_cells(
+        ensure_parallelism(base.select(id_col, vec_col)), C, 1, id_col, vec_col
     )
-    q_cells = queries.select(id_col, vec_col).mapInPandas(
-        _cell_assigner(bc, id_col, vec_col, n_probe), schema=schema
-    )
-    return _ivf_score(q_cells, b_cells, k, id_col, vec_col, dim)
-
-
-def ivf_build_index(
-    base: DataFrame,
-    table: str,
-    n_centroids: int = 16,
-    train_iters: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    path: str | None = None,
-    num_buckets: int | None = None,
-):
-    """Materialize an IVF index: cell-assign every base vector ONCE and
-    persist (a) the inverted lists as a parquet table BUCKETED BY cell
-    and (b) the L2-normalized centroid matrix as ``<table>_centroids``.
-
-    This is the build half of build-once/serve-many made real: probes
-    (``ivf_probe_index``) read the stored lists — the base is never
-    re-assigned per query batch, which the round-4 in-process centroid
-    cache still did. Bucketing by cell means (1) every probe's
-    cell-equality filter prunes whole BUCKETS at the scan (Spark bucket
-    pruning: SelectedBucketsCount n_probed of N in the plan), and (2)
-    any later per-cell rebuild/merge job gets co-located cell groups
-    with no Exchange. At 100 TB the lists table is the only big
-    artifact, written with one linear pass + one bucketed shuffle;
-    the centroid sidecar is k x dim doubles.
-
-    Returns the centroid matrix (numpy (k, dim))."""
-    import numpy as np
-
-    from ..operators.bucketed import write_bucketed
-
-    spark = base.sparkSession
-    if train_iters > 0:
-        C = kmeans_fit(base, n_centroids, iters=train_iters,
-                       id_col=id_col, vec_col=vec_col)
-    else:
-        C = _ivf_fixed_init(base, n_centroids, id_col, vec_col)
-    bc = spark.sparkContext.broadcast(np.asarray(C, dtype=np.float64))
-    schema = f"{id_col} long, {vec_col} array<float>, cell int"
-    b_cells = ensure_parallelism(base.select(id_col, vec_col)).mapInPandas(
-        _cell_assigner(bc, id_col, vec_col, 1), schema=schema
-    )
-    write_bucketed(
-        b_cells,
-        table,
-        ["cell"],
-        num_buckets=num_buckets or n_centroids,
-        sort_cols=["cell", id_col],
-        path=path,
-    )
-    cent = spark.createDataFrame(
-        [(i, [float(x) for x in C[i]]) for i in range(len(C))],
-        "cell int, cvec array<double>",
-    )
-    writer = cent.write.mode("overwrite").format("parquet")
-    if path:
-        writer = writer.option("path", f"{path}_centroids")
-    writer.saveAsTable(f"{table}_centroids")
-    return C
-
-
-def ivf_probe_index(
-    queries: DataFrame,
-    table: str,
-    k: int,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    prune_buckets: bool = True,
-) -> DataFrame:
-    """Serve half of build-once/serve-many: probe a stored IVF index
-    (``ivf_build_index``) without touching, re-scanning beyond the
-    probed cells, or re-assigning the base.
-
-    The centroid sidecar (k x dim doubles — tiny by construction) loads
-    to the driver; queries cell-assign in one Arrow pass; the distinct
-    probed cell ids (bounded by |queries| * n_probe — serving batches
-    are small by design) become a literal IN filter on the bucket
-    column, so the scan reads only the probed BUCKETS
-    (SelectedBucketsCount in the plan — asserted by
-    tests/test_plan_shapes.py). Scoring is the same broadcast-probe
-    exact-cosine top-k as ivf_topk; identical centroids => identical
-    results, so recall properties carry over unchanged."""
-    import numpy as np
-
-    spark = queries.sparkSession
-    cent = spark.table(f"{table}_centroids").orderBy("cell").collect()
-    C = np.stack([np.asarray(r["cvec"], dtype=np.float64) for r in cent])
-    bc = spark.sparkContext.broadcast(C)
-    schema = f"{id_col} long, {vec_col} array<float>, cell int"
-    q_cells = queries.select(id_col, vec_col).mapInPandas(
-        _cell_assigner(bc, id_col, vec_col, n_probe), schema=schema
-    )
-    b_cells = spark.table(table)
-    ts = ivf_tombstones(spark, table)
-    if ts is not None:
-        # deleted ids never surface: broadcast anti-join against the
-        # (change-sized) tombstone set — the incremental-delete contract
-        b_cells = b_cells.join(F.broadcast(ts.select(id_col)), id_col, "left_anti")
-    if prune_buckets:
-        # materialize the assignments ONCE and rebuild the (query-batch-
-        # sized, by the serve-path contract) frame locally: feeding the
-        # lazy q_cells plan to both the distinct-cells collect and
-        # _ivf_score ran the centroid-matrix Arrow pass twice per probe
-        q_rows = q_cells.collect()
-        probed = sorted({r["cell"] for r in q_rows})
-        q_cells = spark.createDataFrame(q_rows, schema=q_cells.schema)
-        if len(probed) < len(C):
-            b_cells = b_cells.filter(F.col("cell").isin(probed))
+    q_cells = _assign_cells(queries, C, n_probe, id_col, vec_col)
     return _ivf_score(q_cells, b_cells, k, id_col, vec_col, dim)
 
 
@@ -939,118 +832,182 @@ def semantic_dedup(
 
 
 # --------------------------------------------------------------------------
-# Incremental IVF index maintenance: the vector-side twin of
-# functions/retrieval.py::Bm25IncrementalIndex (Lucene/FAISS "add to an
-# existing index" semantics).  Change batches are O(batch), never
-# O(corpus): appends assign against the FROZEN centroid sidecar and
-# land in the same bucketed layout (so probes keep their bucket-pruned
-# plan over old + new rows alike); deletes are id tombstones the probe
-# anti-joins (broadcast — tombstone sets are change-sized); compaction
-# folds tombstones into a rewritten lists table with results unchanged.
-# Centroids intentionally do NOT retrain on append — exactly FAISS's
-# IVF contract (retraining is a rebuild, not maintenance), which also
-# keeps incremental == rebuilt bit-identical for probe purposes as long
-# as both use the same centroids.
+# Stored IVF index: build once, serve many, maintain incrementally — the
+# vector-side twin of functions/retrieval.py::Bm25IncrementalIndex.  An
+# index is a plain directory:
+#
+#   centroids.npy          the L2-normalized centroid matrix (k x dim)
+#   lists_<id>/cell=<c>/   the inverted lists, Parquet partitioned by cell
+#   tombstones/            ids deleted since the last compaction
+#   _ivf_manifest.json     names the live lists directory; written last
+#
+# The manifest is the commit point: it is replaced atomically, and an
+# index without one is incomplete.  Change batches are O(batch), never
+# O(corpus): appends assign against the FROZEN centroids and add files
+# to the live lists directory, deletes are id tombstones the probe
+# anti-joins (broadcast — tombstone sets are change-sized), and
+# compaction writes the survivors to a fresh lists directory and swaps
+# the manifest.  Centroids intentionally do NOT retrain on append —
+# exactly FAISS's IVF contract (retraining is a rebuild, not
+# maintenance), which also keeps incremental == rebuilt bit-identical
+# for probe purposes as long as both use the same centroids.
 # --------------------------------------------------------------------------
 
+IVF_MANIFEST = "_ivf_manifest.json"
 
-def _ivf_num_buckets(spark, table: str) -> int:
-    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
-    for r in rows:
-        if r["col_name"].strip() == "Num Buckets":
-            return int(r["data_type"])
-    raise ValueError(f"{table} is not a bucketed table")
+
+def _ivf_manifest(path: str) -> dict:
+    with open(os.path.join(path, IVF_MANIFEST)) as f:
+        return json.load(f)
+
+
+def _write_ivf_manifest(path: str, manifest: dict) -> None:
+    tmp = os.path.join(path, f".{IVF_MANIFEST}.tmp")
+    with open(tmp, "w") as f:
+        json.dump(manifest, f)
+    os.replace(tmp, os.path.join(path, IVF_MANIFEST))
+
+
+def _ivf_centroids(path: str):
+    import numpy as np
+
+    return np.load(os.path.join(path, "centroids.npy"))
+
+
+def _ivf_lists(spark, path: str) -> DataFrame:
+    """The live inverted lists, read with the schema the manifest
+    records (no inference; ``cell`` is the partition column)."""
+    m = _ivf_manifest(path)
+    return spark.read.schema(m["schema"]).parquet(os.path.join(path, m["lists"]))
+
+
+def _write_lists(cells: DataFrame, lists_path: str, mode: str, id_col: str) -> None:
+    """One file per cell per write, sorted by id within it."""
+    (
+        cells.repartition("cell")
+        .sortWithinPartitions("cell", id_col)
+        .write.mode(mode)
+        .partitionBy("cell")
+        .parquet(lists_path)
+    )
+
+
+def ivf_build_index(
+    base: DataFrame,
+    path: str,
+    n_centroids: int = 16,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+):
+    """Materialize an IVF index in the directory ``path``: cell-assign
+    every base vector ONCE against the deterministic hash-ordered
+    centroids and persist the inverted lists partitioned by cell, so a
+    probe's cell filter prunes whole directories at the scan
+    (PartitionFilters on ``cell``) and the base is never re-assigned
+    per query batch.  Replaces whatever index ``path`` held.
+
+    Returns the centroid matrix (numpy (k, dim))."""
+    import numpy as np
+
+    os.makedirs(path, exist_ok=True)
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(os.path.join(path, IVF_MANIFEST))
+    for name in os.listdir(path):
+        if name.startswith("lists_") or name == "tombstones":
+            shutil.rmtree(os.path.join(path, name), ignore_errors=True)
+    C = _ivf_fixed_init(base, n_centroids, id_col, vec_col)
+    np.save(os.path.join(path, "centroids.npy"), C)
+    cells = _assign_cells(
+        ensure_parallelism(base.select(id_col, vec_col)), C, 1, id_col, vec_col
+    )
+    lists = f"lists_{uuid.uuid4().hex[:8]}"
+    _write_lists(cells, os.path.join(path, lists), "overwrite", id_col)
+    schema = f"{id_col} long, {vec_col} array<float>, cell int"
+    _write_ivf_manifest(path, {"lists": lists, "schema": schema})
+    return C
+
+
+def ivf_probe_index(
+    queries: DataFrame,
+    path: str,
+    k: int,
+    n_probe: int = 4,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    dim: int = 64,
+) -> DataFrame:
+    """Serve half of build-once/serve-many: probe a stored IVF index
+    (``ivf_build_index``) without re-assigning or scanning beyond the
+    probed cells of the base.
+
+    Queries cell-assign in one Arrow pass, materialized once (serving
+    batches are small by design) and rebuilt as a local relation; the
+    distinct probed cells become a ``cell IN (...)`` partition filter,
+    so the scan lists only the probed cells' files (PartitionFilters in
+    the plan — asserted by tests/test_plan_shapes.py).  Scoring is the
+    same broadcast-probe exact-cosine top-k as ivf_topk; identical
+    centroids => identical results."""
+    spark = queries.sparkSession
+    q_cells = _assign_cells(queries, _ivf_centroids(path), n_probe, id_col, vec_col)
+    q_rows = q_cells.collect()
+    probed = sorted({r["cell"] for r in q_rows})
+    q_cells = spark.createDataFrame(q_rows, schema=q_cells.schema)
+    b_cells = _ivf_lists(spark, path).filter(F.col("cell").isin(probed))
+    ts = ivf_tombstones(spark, path)
+    if ts is not None:
+        # deleted ids never surface: broadcast anti-join against the
+        # (change-sized) tombstone set
+        b_cells = b_cells.join(F.broadcast(ts.select(id_col)), id_col, "left_anti")
+    return _ivf_score(q_cells, b_cells, k, id_col, vec_col, dim)
 
 
 def ivf_index_append(
     new_vectors: DataFrame,
-    table: str,
+    path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Append a batch to a stored IVF index: assign against the existing
-    centroid sidecar (one Arrow pass over the BATCH only) and append to
-    the bucketed lists table with the identical bucket spec, so bucket
-    pruning keeps working across old and new files."""
-    import numpy as np
-
-    spark = new_vectors.sparkSession
-    cent = spark.table(f"{table}_centroids").orderBy("cell").collect()
-    C = np.stack([np.asarray(r["cvec"], dtype=np.float64) for r in cent])
-    bc = spark.sparkContext.broadcast(C)
-    schema = f"{id_col} long, {vec_col} array<float>, cell int"
-    b_cells = ensure_parallelism(new_vectors.select(id_col, vec_col)).mapInPandas(
-        _cell_assigner(bc, id_col, vec_col, 1), schema=schema
+    """Append a batch to a stored IVF index: assign against the frozen
+    centroids (one Arrow pass over the BATCH only) and add its files to
+    the live lists directory, where the probe's cell filter prunes them
+    like the built ones."""
+    cells = _assign_cells(
+        ensure_parallelism(new_vectors.select(id_col, vec_col)),
+        _ivf_centroids(path), 1, id_col, vec_col,
     )
-    nb = _ivf_num_buckets(spark, table)
-    (
-        b_cells.write.mode("append")
-        .format("parquet")
-        .bucketBy(nb, "cell")
-        .sortBy("cell", id_col)
-        .saveAsTable(table)
-    )
+    lists = os.path.join(path, _ivf_manifest(path)["lists"])
+    _write_lists(cells, lists, "append", id_col)
 
 
-def ivf_index_delete(spark, table: str, ids: list[int], id_col: str = "vec_id") -> None:
+def ivf_index_delete(spark, path: str, ids: list[int], id_col: str = "vec_id") -> None:
     """Tombstone ids in a stored IVF index (O(change): one tiny append;
-    the lists table is untouched)."""
+    the lists are untouched)."""
     df = spark.createDataFrame([(int(i),) for i in ids], f"{id_col} long")
-    df.write.mode("append").format("parquet").saveAsTable(f"{table}_tombstones")
+    df.write.mode("append").parquet(os.path.join(path, "tombstones"))
 
 
-def ivf_tombstones(spark, table: str):
-    """The live tombstone set, or None when nothing was ever deleted."""
-    if spark.catalog.tableExists(f"{table}_tombstones"):
-        return spark.table(f"{table}_tombstones")
-    return None
+def ivf_tombstones(spark, path: str):
+    """The live tombstone set, or None when nothing was deleted since
+    the last compaction."""
+    p = os.path.join(path, "tombstones")
+    if not os.path.isdir(p) or not any(n.endswith(".parquet") for n in os.listdir(p)):
+        return None
+    return spark.read.parquet(p)
 
 
-def ivf_index_compact(spark, table: str, id_col: str = "vec_id") -> None:
-    """Fold tombstones into the lists table: rewrite surviving rows into
-    a fresh bucketed table (same spec), swap it in, clear tombstones.
-    Per-cell work only, and the bucketed layout means the rewrite's
-    groups are co-located (no Exchange beyond the bucket write)."""
-    from ..operators.bucketed import write_bucketed
-
-    ts = ivf_tombstones(spark, table)
+def ivf_index_compact(spark, path: str, id_col: str = "vec_id") -> None:
+    """Fold tombstones into the lists: write the surviving rows to a
+    fresh lists directory, swap the manifest to it, then remove the old
+    lists and the tombstones.  A crash before the swap leaves the old
+    index live; one after it leaves the old lists unreferenced (the
+    next build removes them) and tombstones that name no surviving id."""
+    ts = ivf_tombstones(spark, path)
     if ts is None:
         return
-    nb = _ivf_num_buckets(spark, table)
-    survivors = spark.table(table).join(
-        F.broadcast(ts), id_col, "left_anti"
-    )
-    # an EXTERNAL lists table (ivf_build_index(..., path=...)) must stay
-    # external: staging without a path would silently relocate the index
-    # into the warehouse AND leave every original data file orphaned at
-    # the old location (DROP TABLE does not delete external files) —
-    # with path-readers then seeing stale pre-compaction data.  Stage
-    # next to the current location and reclaim the superseded files
-    # after the swap.
-    import uuid as _uuid
-
-    desc = {
-        r["col_name"]: r["data_type"]
-        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
-    }
-    old_loc = desc.get("Location")
-    is_external = desc.get("Type", "").strip().upper() == "EXTERNAL"
-    new_path = (
-        old_loc.rstrip("/") + f"_compact_{_uuid.uuid4().hex[:8]}"
-        if is_external and old_loc
-        else None
-    )
-    staging = f"{table}_compact_staging"
-    spark.sql(f"DROP TABLE IF EXISTS {staging}")
-    write_bucketed(survivors, staging, ["cell"], num_buckets=nb,
-                   sort_cols=["cell", id_col], path=new_path)
-    spark.sql(f"DROP TABLE {table}")
-    spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
-    spark.sql(f"DROP TABLE {table}_tombstones")
-    if new_path and old_loc.startswith("file:"):
-        # local-filesystem reclaim of the superseded index files; on an
-        # object store leave them for the owner's lifecycle policy
-        import shutil
-        from urllib.parse import urlparse
-
-        shutil.rmtree(urlparse(old_loc).path, ignore_errors=True)
+    m = _ivf_manifest(path)
+    survivors = _ivf_lists(spark, path).join(F.broadcast(ts), id_col, "left_anti")
+    lists = f"lists_{uuid.uuid4().hex[:8]}"
+    _write_lists(survivors, os.path.join(path, lists), "overwrite", id_col)
+    _write_ivf_manifest(path, {**m, "lists": lists})
+    shutil.rmtree(os.path.join(path, m["lists"]), ignore_errors=True)
+    shutil.rmtree(os.path.join(path, "tombstones"), ignore_errors=True)

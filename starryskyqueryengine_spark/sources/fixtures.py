@@ -93,9 +93,21 @@ def _schema_cache_key(path: str) -> tuple | None:
 
 def table_fingerprint(sf_dir, table: str) -> tuple | None:
     """The stat fingerprint of one fixture table: the cache key for every
-    artifact derived from it (IVF centroids, BPE merges, the BM25 index,
-    the Z-order layout), so a regenerated fixture rebuilds them."""
+    artifact derived from it (IVF centroids and index, BPE merges, the
+    BM25 index, the Z-order layout), so a regenerated fixture rebuilds them."""
     return _schema_cache_key(f"{sf_dir}/{table}.parquet")
+
+
+def memo_by_fingerprint(cache: dict, sf_dir, table: str, build):
+    """``build()``, memoized in ``cache`` per ``sf_dir`` together with the
+    table's fingerprint: a regenerated fixture replaces its directory's
+    entry instead of adding one, so the cache never outgrows the number
+    of dataset directories a process reads."""
+    fp = table_fingerprint(sf_dir, table)
+    hit = cache.get(str(sf_dir))
+    if hit is None or hit[0] != fp:
+        hit = cache[str(sf_dir)] = (fp, build())
+    return hit[1]
 
 
 def artifact_dir(kind: str, sf_dir, table: str) -> str:

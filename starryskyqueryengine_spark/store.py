@@ -171,9 +171,14 @@ class PostStore:
         # never be served, and NULL never equals NULL in the anti-join,
         # so such a row would be re-inserted on EVERY re-delivery —
         # 'ON CONFLICT DO NOTHING' silently lost for exactly the hostile
-        # rows PERMISSIVE parsing lets through
+        # rows PERMISSIVE parsing lets through.  So is a row without the
+        # (indexedAt, cid) sort key: a page ending on it could not encode
+        # a cursor, and the rest of its feed could not be paged
         incoming = incoming.filter(
-            F.col("uri").isNotNull() & F.col("key").isNotNull()
+            F.col("uri").isNotNull()
+            & F.col("key").isNotNull()
+            & F.col("indexedAt").isNotNull()
+            & F.col("cid").isNotNull()
         )
         deduped = dedup_within_batch(incoming, ["uri", "key"]).cache()
         batch = deduped
@@ -308,21 +313,6 @@ class PostStore:
         # same rows in new files: the old heads hold under the new tokens
         self._heads_after(before, lambda k, old: old)
         return fragmented
-
-    @staticmethod
-    def save_bucketed(df: DataFrame, table_name: str, n_buckets: int = 64) -> None:
-        """Write a bucketed copy of the store (bucketBy uri) for
-        co-located PK joins: two tables bucketed the same way join
-        bucket-to-bucket with NO exchange on either side — at 100 TB
-        this removes the dominant shuffle from the upsert anti-join
-        (see tests/test_plan_shapes.py::test_bucketed_join_avoids_shuffle).
-        Requires a metastore-backed table (saveAsTable)."""
-        (
-            df.write.mode("overwrite")
-            .bucketBy(n_buckets, "uri")
-            .sortBy("uri")
-            .saveAsTable(table_name)
-        )
 
     def delete_key(self, key: str) -> None:
         """U4 cascade: remove the key's partition entirely."""

@@ -524,8 +524,7 @@ class TxnLogFormat(TableFormat):
         inside the window cancelled and removes counted only for files
         live at ``v_from`` — the SINGLE implementation of the CDF's
         netting algebra, shared by :meth:`changes_between` and external
-        incremental consumers (operators/matview.py) so their file sets
-        can never drift apart."""
+        incremental consumers so their file sets can never drift apart."""
         if v_to < v_from:
             raise ValueError(f"v_to {v_to} < v_from {v_from}")
         added: dict[str, str] = {}

@@ -11,8 +11,13 @@ SF_SMALL = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="session")
-def spark():
-    s = get_spark("ssqe-tests", master="local[4]", shuffle_partitions=8)
+def spark(tmp_path_factory):
+    # a per-run warehouse: no test can leave tables in the checkout
+    warehouse = str(tmp_path_factory.mktemp("spark-warehouse"))
+    s = get_spark(
+        "ssqe-tests", master="local[4]", shuffle_partitions=8,
+        extra_confs={"spark.sql.warehouse.dir": warehouse},
+    )
     yield s
 
 

@@ -87,30 +87,22 @@ def test_tokenize_corpus_distributed(spark, merges):
         assert out[i]["n_tokens"] <= out[i]["n_bytes"]
 
 
-# ------------------------------------------------- distributed training
+def test_merge_cache_keeps_one_entry_per_dir(spark, tmp_path):
+    """A regenerated documents fixture replaces its directory's merge
+    table instead of adding one per fingerprint."""
+    import os
+    import shutil
 
+    from starryskyqueryengine_spark import catalog_text as ct
+    from starryskyqueryengine_spark.sources.fixtures import table_fingerprint
 
-def test_train_bpe_spark_identical_merge_list(spark, merges):
-    """The distributed trainer (Spark pair-count aggregate + Catalyst
-    fold merge application) must reproduce the driver trainer's merge
-    list EXACTLY — same counts, same lowest-pair tie-break — on the
-    same corpus.  40 merges keeps the per-round job count test-sized;
-    the prefix property (merge k is independent of n_merges) makes the
-    comparison against the driver's first 40 exact."""
-    from starryskyqueryengine_spark.functions.bpe import train_bpe_spark
-
-    df = spark.createDataFrame([(t,) for t in CORPUS], "text string")
-    got = train_bpe_spark(df, "text", n_merges=40)
-    assert got == merges[:40]
-
-
-def test_train_bpe_spark_overlapping_pair_fold(spark):
-    """'aaaa' with merge (a,a): the fold must yield [aa, aa], never a
-    greedy re-merge against the just-formed token — pins the
-    accumulator-tail semantics of the Catalyst fold."""
-    from starryskyqueryengine_spark.functions.bpe import train_bpe_spark
-
-    df = spark.createDataFrame([("aaaa aaaa aaaa",)], "text string")
-    got = train_bpe_spark(df, "text", n_merges=3)
-    assert got == train_bpe(["aaaa aaaa aaaa"], n_merges=3)
-    assert got[0] == (b"a", b"a")
+    sf = str(tmp_path)
+    doc = f"{sf}/documents.parquet"
+    shutil.copy("/root/testdata/sf0.001/documents.parquet", doc)
+    n0 = len(ct._BPE_MERGES_CACHE)
+    first = ct._bpe_merges_for(spark, sf)
+    st = os.stat(doc)
+    os.utime(doc, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert ct._bpe_merges_for(spark, sf) == first
+    assert len(ct._BPE_MERGES_CACHE) == n0 + 1
+    assert ct._BPE_MERGES_CACHE[sf][0] == table_fingerprint(sf, "documents")

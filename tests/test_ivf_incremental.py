@@ -1,5 +1,5 @@
 """Incremental IVF index maintenance invariants: append / tombstone
-delete / compact against a stored bucketed index (the vector twin of
+delete / compact against a stored index directory (the vector twin of
 tests/test_retrieval_index.py).
 
 Centroids are frozen at build time (the FAISS IVF contract), so every
@@ -9,21 +9,18 @@ identically however the change batches were sliced."""
 
 from __future__ import annotations
 
-import uuid
+import os
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from starryskyqueryengine_spark.functions import similarity as sim
+from tests.test_plan_shapes import probed_cells
 
 SF_DIR = "/root/testdata/sf0.001"
 K = 10
 N_PROBE = 4
-
-
-def _emb(spark):
-    return spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
 
 
 def _rows(df):
@@ -32,7 +29,7 @@ def _rows(df):
 
 @pytest.fixture(scope="module")
 def world(spark):
-    emb = _emb(spark)
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 5)
     A = emb.filter((F.col("vec_id") >= 5) & (F.col("vec_id") < 300))
     B = emb.filter(F.col("vec_id") >= 300)
@@ -41,23 +38,22 @@ def world(spark):
     return emb, queries, A, B, B1, B2
 
 
-def _build_on_A(spark, A, name=None):
-    table = name or f"ivf_inc_{uuid.uuid4().hex[:10]}"
-    sim.ivf_build_index(A, table, n_centroids=16, train_iters=0)
-    return table
+def _build_on_A(A, path):
+    sim.ivf_build_index(A, str(path), n_centroids=16)
+    return str(path)
 
 
-def test_append_batching_invariance_and_completeness(spark, world):
+def test_append_batching_invariance_and_completeness(spark, world, tmp_path):
     emb, queries, A, B, B1, B2 = world
-    t1 = _build_on_A(spark, A)
+    t1 = _build_on_A(A, tmp_path / "one")
     sim.ivf_index_append(B, t1)
-    t2 = _build_on_A(spark, A)
+    t2 = _build_on_A(A, tmp_path / "two")
     sim.ivf_index_append(B1, t2)
     sim.ivf_index_append(B2, t2)
 
-    # completeness: both tables hold exactly A ∪ B with identical cells
-    c1 = _rows(spark.table(t1).select("vec_id", "cell"))
-    c2 = _rows(spark.table(t2).select("vec_id", "cell"))
+    # completeness: both indexes hold exactly A ∪ B with identical cells
+    c1 = _rows(sim._ivf_lists(spark, t1).select("vec_id", "cell"))
+    c2 = _rows(sim._ivf_lists(spark, t2).select("vec_id", "cell"))
     assert c1 == c2
     assert len(c1) == A.count() + B.count()
 
@@ -70,13 +66,12 @@ def test_append_batching_invariance_and_completeness(spark, world):
     assert any(r[1] >= 300 for r in p1), "no appended vector ever retrieved"
 
 
-def test_appended_cells_match_frozen_centroids(spark, world):
+def test_appended_cells_match_frozen_centroids(spark, world, tmp_path):
     emb, queries, A, B, B1, B2 = world
-    t = _build_on_A(spark, A)
+    t = _build_on_A(A, tmp_path / "idx")
     sim.ivf_index_append(B, t)
-    cent = spark.table(f"{t}_centroids").orderBy("cell").collect()
-    C = np.stack([np.asarray(r["cvec"], dtype=np.float64) for r in cent])
-    got = {r["vec_id"]: r["cell"] for r in spark.table(t).collect()}
+    C = np.load(os.path.join(t, "centroids.npy"))
+    got = {r["vec_id"]: r["cell"] for r in sim._ivf_lists(spark, t).collect()}
     sample = B.limit(40).collect()
     for r in sample:
         x = np.asarray(r["embedding"], dtype=np.float64)
@@ -87,15 +82,15 @@ def test_appended_cells_match_frozen_centroids(spark, world):
         assert got[r["vec_id"]] == best, r["vec_id"]
 
 
-def test_delete_tombstones_equal_physical_removal(spark, world):
+def test_delete_tombstones_equal_physical_removal(spark, world, tmp_path):
     emb, queries, A, B, B1, B2 = world
     doomed = [int(r["vec_id"]) for r in B.limit(30).collect()]
 
-    t = _build_on_A(spark, A)
+    t = _build_on_A(A, tmp_path / "tomb")
     sim.ivf_index_append(B, t)
     sim.ivf_index_delete(spark, t, doomed)
 
-    ref = _build_on_A(spark, A)
+    ref = _build_on_A(A, tmp_path / "ref")
     sim.ivf_index_append(
         B.join(spark.createDataFrame([(i,) for i in doomed], "vec_id long"),
                "vec_id", "left_anti"),
@@ -107,61 +102,38 @@ def test_delete_tombstones_equal_physical_removal(spark, world):
     assert not any(r[1] in set(doomed) for r in p_ts)
 
 
-def test_compact_folds_tombstones_results_unchanged(spark, world):
+def test_compact_folds_tombstones_results_unchanged(spark, world, tmp_path):
     emb, queries, A, B, B1, B2 = world
     doomed = [int(r["vec_id"]) for r in B.limit(25).collect()]
-    t = _build_on_A(spark, A)
+    t = _build_on_A(A, tmp_path / "idx")
     sim.ivf_index_append(B, t)
-    n_before = spark.table(t).count()
+    n_before = sim._ivf_lists(spark, t).count()
     sim.ivf_index_delete(spark, t, doomed)
     before = _rows(sim.ivf_probe_index(queries, t, K, n_probe=N_PROBE))
+    old_lists = sim._ivf_manifest(t)["lists"]
 
     sim.ivf_index_compact(spark, t)
-    assert not spark.catalog.tableExists(f"{t}_tombstones")
-    assert spark.table(t).count() == n_before - len(doomed)
+    assert sim.ivf_tombstones(spark, t) is None
+    # the survivors live in a fresh lists directory; the old one is gone
+    assert not os.path.exists(os.path.join(t, old_lists))
+    assert sorted(n for n in os.listdir(t) if n.startswith("lists_")) == [
+        sim._ivf_manifest(t)["lists"]
+    ]
+    assert sim._ivf_lists(spark, t).count() == n_before - len(doomed)
     after = _rows(sim.ivf_probe_index(queries, t, K, n_probe=N_PROBE))
     assert before == after
-    # compacted table keeps the bucketed layout (appendable again)
+    # the compacted index is appendable again
     sim.ivf_index_append(emb.filter(F.col("vec_id") < 5), t)
-    assert spark.table(t).count() == n_before - len(doomed) + 5
+    assert sim._ivf_lists(spark, t).count() == n_before - len(doomed) + 5
 
 
-def test_probe_stays_bucket_pruned_after_append(spark, world):
+def test_probe_stays_bucket_pruned_after_append(spark, world, tmp_path):
+    """The probe's cell filter prunes the appended files like the built
+    ones: a partition filter on ``cell`` naming fewer than all cells."""
     emb, queries, A, B, B1, B2 = world
-    t = _build_on_A(spark, A)
+    t = _build_on_A(A, tmp_path / "idx")
     sim.ivf_index_append(B, t)
     df = sim.ivf_probe_index(queries, t, K, n_probe=N_PROBE)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "SelectedBucketsCount" in plan, "bucket pruning lost after append"
-
-
-def test_compact_keeps_external_index_external(spark, world, tmp_path):
-    """Compacting an EXTERNAL index (built with path=...) must keep the
-    lists table external — the old code staged WITHOUT a path, silently
-    relocating the index into the warehouse and orphaning every
-    original data file at the old location (stale for path-readers)."""
-    import os
-
-    emb, queries, A, B, B1, B2 = world
-    t = f"ivf_ext_{uuid.uuid4().hex[:10]}"
-    old_path = str(tmp_path / "idx")
-    sim.ivf_build_index(A, t, n_centroids=16, train_iters=0, path=old_path)
-    doomed = [r["vec_id"] for r in A.limit(7).collect()]
-    sim.ivf_index_delete(spark, t, doomed)
-    n_before = spark.table(t).count()
-    before = _rows(sim.ivf_probe_index(queries, t, K, n_probe=N_PROBE))
-
-    sim.ivf_index_compact(spark, t)
-
-    desc = {
-        r["col_name"]: r["data_type"]
-        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {t}").collect()
-    }
-    assert desc.get("Type", "").strip().upper() == "EXTERNAL"
-    loc = desc["Location"]
-    assert str(tmp_path) in loc  # stayed outside the warehouse
-    # superseded files reclaimed; compacted data is what path-readers see
-    assert not os.path.exists(old_path)
-    assert spark.table(t).count() == n_before - len(doomed)
-    assert _rows(sim.ivf_probe_index(queries, t, K, n_probe=N_PROBE)) == before
-    spark.sql(f"DROP TABLE {t}")
+    cells = probed_cells(df._jdf.queryExecution().executedPlan().toString())
+    assert cells is not None, "cell pruning lost after append"
+    assert 0 < len(cells) < 16

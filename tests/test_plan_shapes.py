@@ -134,38 +134,6 @@ def test_conditions_registry_broadcasts(spark):
     assert "BroadcastHashJoin" in plan_of(joined)
 
 
-def test_bucketed_join_avoids_shuffle(spark):
-    """Two tables bucketed on the join key must sort-merge join with no
-    Exchange on either side — the co-located PK anti-join that removes
-    the dominant shuffle from upserts at scale."""
-    from starryskyqueryengine_spark.store import PostStore
-
-    posts = load_table(spark, SF_DIR, "events").select(
-        F.concat(F.lit("e"), F.col("event_id").cast("string")).alias("uri"),
-        F.col("event_type").alias("key"),
-    )
-    import shutil
-
-    for t in ("bk_stored", "bk_incoming"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
-    PostStore.save_bucketed(posts, "bk_stored", n_buckets=8)
-    PostStore.save_bucketed(posts.limit(500), "bk_incoming", n_buckets=8)
-    # at fixture size the planner would broadcast (and rightly skip the
-    # bucketed scan); disable broadcast to surface the at-scale shape
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("bk_incoming").join(
-            spark.table("bk_stored"), "uri", "left_anti"
-        )
-        plan = plan_of(joined)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    assert "SortMergeJoin" in plan
-    assert "Exchange" not in plan  # bucket-to-bucket, no shuffle either side
-
-
 def test_multifeed_single_scan(spark, queries):
     """32 feeds must still be ONE parquet scan (the reference rescans
     per feed; a regression here multiplies 100 TB reads by feed count)."""
@@ -335,41 +303,30 @@ def test_q21_semi_and_anti_join_present(spark, queries):
     assert "LeftAnti" in opt
 
 
-def test_ivf_probe_reads_stored_index_no_base_reassignment(spark):
-    """Build-once/serve-many, the serve half: probing a persisted IVF
-    index must (1) scan the bucketed inverted-lists table with bucket
-    pruning (SelectedBucketsCount n_probed of n_cells), (2) run exactly
-    ONE Python eval pass — the query-side cell assignment; the base side
-    is pure FileScan, never re-assigned per probe — and (3) return the
-    same rows as the ad-hoc ivf_topk with identical centroids."""
-    import shutil
-
+def test_ivf_probe_reads_stored_index_no_base_reassignment(spark, tmp_path):
+    """Build-once/serve-many, the serve half: probing a stored IVF
+    index must (1) scan the cell-partitioned inverted lists with a
+    partition filter naming fewer than all 16 cells, (2) run ZERO Python
+    passes in the serve plan — the query-side assignment ran once at
+    probe-build and is a local relation, and the base is pure FileScan,
+    never re-assigned per probe — and (3) return the same rows as the
+    ad-hoc ivf_topk with identical centroids."""
     from starryskyqueryengine_spark.functions import similarity as sim
 
     emb = load_table(spark, SF_DIR, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 5)
     base = emb.filter(F.col("vec_id") >= 5)
-
-    for t in ("ivf_plan_test", "ivf_plan_test_centroids"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
-    sim.ivf_build_index(base, "ivf_plan_test", n_centroids=16, train_iters=0)
+    path = str(tmp_path / "ivf")
+    sim.ivf_build_index(base, path, n_centroids=16)
 
     # two probes: the second is the steady-state serve path
-    sim.ivf_probe_index(queries_df, "ivf_plan_test", 10, n_probe=4).collect()
-    probe2 = sim.ivf_probe_index(queries_df, "ivf_plan_test", 10, n_probe=4)
+    sim.ivf_probe_index(queries_df, path, 10, n_probe=4).collect()
+    probe2 = sim.ivf_probe_index(queries_df, path, 10, n_probe=4)
     plan = plan_of(probe2)
 
-    assert "SelectedBucketsCount" in plan, plan
-    import re
-
-    m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
-    assert m, plan
-    assert int(m.group(1)) < int(m.group(2))  # probed cells < all cells
-    # ZERO Python passes in the serve plan: the query-side assignment
-    # ran ONCE at probe-build (collected and re-materialized as a local
-    # relation — it used to execute twice, once for the pruning collect
-    # and again lazily here), and the base is never re-assigned
+    cells = probed_cells(plan)
+    assert cells is not None, plan
+    assert 0 < len(cells) < 16, plan  # probed cells < all cells
     assert plan.count("MapInPandas") == 0, plan
 
     # results identical to the ad-hoc path with the same fixed centroids
@@ -378,6 +335,16 @@ def test_ivf_probe_reads_stored_index_no_base_reassignment(spark):
     a = sorted(map(tuple, probe2.collect()))
     b = sorted(map(tuple, adhoc.collect()))
     assert a == b
+
+
+def probed_cells(plan: str) -> list[int] | None:
+    """The cells named by the scan's partition filter on ``cell`` (an
+    ``IN`` list, or ``INSET`` once the list passes Spark's conversion
+    threshold), or None when the scan has no such filter."""
+    import re
+
+    m = re.search(r"PartitionFilters: \[[^\]]*cell#\d+ (?:IN \(|INSET )([\d, ]+)", plan)
+    return None if m is None else [int(c) for c in m.group(1).split(",") if c.strip()]
 
 
 def test_q2_cost_aggregates_before_join_and_dims_broadcast(spark, queries):

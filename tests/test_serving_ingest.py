@@ -74,6 +74,28 @@ def test_serving_page_and_cursor(spark, world):
         server.get_feed_skeleton("nope")
 
 
+def test_post_without_created_at_is_not_stored_and_feed_pages_to_end(spark, world):
+    """A post with a NULL createdAt has no indexedAt to page by: ingest
+    does not store it, so no page can end on it with a cursor the next
+    request rejects, and the feed pages to the end."""
+    reg, store, job, server = world
+    rows = [{"uri": f"at://u/p/{i}", "cid": f"c{i:03d}", "text": "spark rocks",
+             "createdAt": t(i)} for i in range(2)]
+    rows.append({"uri": "at://u/p/undated", "cid": "c999", "text": "spark rocks",
+                 "createdAt": None})
+    assert job.run_once(make_posts(spark, rows))["sparkfeed"] == 2
+    assert {r["uri"] for r in store.read_key("sparkfeed").collect()} == {
+        "at://u/p/0", "at://u/p/1"}
+    seen, cursor = [], None
+    while True:
+        page = server.get_feed_skeleton("sparkfeed", limit=1, cursor=cursor)
+        if not page.feed:
+            break
+        seen += [f["post"] for f in page.feed]
+        cursor = page.cursor
+    assert seen == ["at://u/p/1", "at://u/p/0"]
+
+
 def test_serving_acl_and_pinned(spark, world):
     reg, store, job, server = world
     job.run_once(incoming(spark))

@@ -388,7 +388,7 @@ def test_ann_ivf_topk_trained_recall_vs_exact(spark):
     )
 
     sf = "/root/testdata/sf0.001"
-    cs._IVF_CENTROIDS.clear()  # force a fresh train in this process
+    cs._IVF_CENTROIDS.pop(sf, None)  # force a fresh train in this process
     exact = {
         (r["q_id"], r["nn_id"]) for r in ann_cosine_topk(spark, sf).collect()
     }
@@ -397,6 +397,94 @@ def test_ann_ivf_topk_trained_recall_vs_exact(spark):
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.5, recall
+
+
+def _touch(path):
+    """Move a file's mtime forward: a regenerated fixture, as the
+    fingerprint sees it."""
+    import os
+
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+
+
+def test_ivf_centroid_cache_keeps_one_entry_per_dir(spark, tmp_path):
+    """A regenerated fixture replaces its directory's centroid entry
+    instead of adding one per fingerprint."""
+    import shutil
+
+    from starryskyqueryengine_spark import catalog_similarity as cs
+    from starryskyqueryengine_spark.sources.fixtures import table_fingerprint
+
+    sf = str(tmp_path)
+    shutil.copy(f"{SF}/embeddings.parquet", sf)
+    n0 = len(cs._IVF_CENTROIDS)
+    cs.ann_ivf_topk(spark, sf)
+    _touch(f"{sf}/embeddings.parquet")
+    cs.ann_ivf_topk(spark, sf)
+    assert len(cs._IVF_CENTROIDS) == n0 + 1
+    assert cs._IVF_CENTROIDS[sf][0] == table_fingerprint(sf, "embeddings")
+
+
+def test_ivf_index_reused_by_a_fresh_session(spark, monkeypatch, tmp_path):
+    """The stored IVF index is a directory, not session state: a second
+    ann_ivf_indexed_topk in a fresh SparkSession probes the index the
+    first call built, with no rebuild and the same rows."""
+    import os
+    import tempfile
+
+    from starryskyqueryengine_spark import catalog_similarity as cs
+    from starryskyqueryengine_spark.sources.fixtures import artifact_dir
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    first = sorted(map(tuple, cs.ann_ivf_indexed_topk(spark, SF).collect()))
+    path = artifact_dir("ivf", SF, "embeddings")
+    assert os.path.exists(os.path.join(path, sim.IVF_MANIFEST))
+    builds = []
+    monkeypatch.setattr(sim, "ivf_build_index", lambda *a, **k: builds.append(a))
+    again = cs.ann_ivf_indexed_topk(spark.newSession(), SF)
+    assert sorted(map(tuple, again.collect())) == first and builds == []
+
+
+def test_ivf_index_refuses_foreign_owned_dir(monkeypatch, tmp_path):
+    """ann_ivf_indexed_topk goes through the shared ownership gate: a
+    directory at the predictable per-uid path that another uid owns is
+    refused at path computation, and one planted after that is refused
+    where the manifest is trusted — never probed as embeddings data."""
+    import os
+    import tempfile
+
+    import pytest
+
+    from starryskyqueryengine_spark import catalog_similarity as cs
+    from starryskyqueryengine_spark.sources.fixtures import artifact_dir
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    path = artifact_dir("ivf", SF, "embeddings")
+    os.makedirs(path)
+    with open(os.path.join(path, sim.IVF_MANIFEST), "w") as f:
+        f.write("{}")
+    real_stat = os.stat
+
+    class _ForeignStat:
+        def __init__(self, st):
+            self._st = st
+            self.st_uid = os.getuid() + 1
+
+        def __getattr__(self, k):
+            return getattr(self._st, k)
+
+    monkeypatch.setattr(
+        os, "stat",
+        lambda p, *a, **k: _ForeignStat(real_stat(p, *a, **k))
+        if str(p) == path else real_stat(p, *a, **k),
+    )
+    with pytest.raises(PermissionError, match="refusing"):
+        cs.ann_ivf_indexed_topk(None, SF)
+    # planted after the path check ran: the manifest trust point refuses it
+    monkeypatch.setattr(cs, "artifact_dir", lambda *a: path)
+    with pytest.raises(PermissionError, match="refusing"):
+        cs.ann_ivf_indexed_topk(None, SF)
 
 
 def test_containment_catches_excerpt_jaccard_misses(spark):
