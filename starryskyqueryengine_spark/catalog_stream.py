@@ -1,80 +1,109 @@
 """Streaming catalog queries: real Structured Streaming runs (availableNow
 drain) whose final state is compared against batch SQL oracles — the
-strongest form of streaming correctness check available to the driver.
-Temp checkpoint/store dirs are fresh per call so repeated driver runs are
-isolated."""
+strongest form of streaming correctness check the catalog has — plus the
+ACID table lifecycle audits.
+
+Each call does all its work (stream staging, checkpoint, sink output,
+ACID table) inside one scratch directory and returns a frame that no
+longer reads from it: memory-sink rows stay with the frame after the
+sink's temp view is dropped, file-sink results are local checkpoints,
+and the ACID audits return rows collected into Python. The directory is
+removed before the call returns, so repeated runs are isolated and leave
+nothing behind in the temp dir or the session catalog."""
 
 from __future__ import annotations
 
+import os
 import tempfile
-import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
 from .catalog import register
 from .catalog_analytics import RANGE_WIDTH_US
+from .schemas import POST_SCHEMA
+from .session import scoped_shuffle_partitions
+from .sources.fixtures import fixture_schema, load_table, normalize_events_ts
+from .sources.table_changes import register_table_changes_source
 from .store import PostStore
-from .streaming import foreach_batch_upsert, parquet_stream, run_available_now, windowed_counts
+from .streaming import (
+    foreach_batch_upsert,
+    parquet_stream,
+    run_available_now,
+    session_counts,
+    sliding_counts,
+    stream_dedup,
+    stream_interval_join,
+    stream_interval_join_outer,
+    stream_running_stats,
+    windowed_counts,
+)
+from .streaming.pipeline import drain_available_now, stream_static_enrich
+from .streaming.stateful import stream_pattern_matches
+from .table_format import TxnLogFormat
+
+# The stateful operators allocate one state-store instance per shuffle
+# partition, fixed at the stream's first checkpoint; at fixture volume 64
+# instances are pure per-task overhead (measured 2-7x the whole drain).
+# A production stream sizes this to sustained throughput before its first
+# start, so the drains scope it at the query edge, not in the session.
+STREAM_SHUFFLE_PARTITIONS = 8
+POST_COLS = POST_SCHEMA.fieldNames()
 
 
-def _drain(q, timeout: int = 300) -> None:
-    """Await an availableNow drain and FAIL LOUDLY on timeout.
-
-    ``awaitTermination(timeout)`` returns False on a slow drain; every
-    caller here immediately reads the memory table / output dir, so
-    ignoring that bool would compare a PARTIAL result against the
-    oracle (silently wrong counts) while the still-active query keeps
-    writing into the dir being read.  Same contract as
-    ``streaming.run_available_now`` — stop the leak, then raise."""
-    done = q.awaitTermination(timeout)
-    if q.isActive:
-        q.stop()
-    if not done:
-        raise TimeoutError(
-            f"availableNow drain did not finish within {timeout}s"
-        )
-
-
-@contextmanager
-def _stream_shuffle(spark, n: int = 8):
-    """Scope shuffle partitions down for the availableNow drain.
-
-    The stateful operators allocate one state-store instance per shuffle
-    partition, fixed at the stream's first checkpoint; at this fixture
-    volume 64 instances are pure per-task overhead (measured 2-7x the
-    whole drain). A production stream sizes this to sustained throughput
-    BEFORE first start — it cannot change under an existing checkpoint —
-    so the knob lives here at the query edge, not in the session."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
-def _events_stream(spark, sf_dir, schema=None):
+def _events_stream(spark, sf_dir, stage, schema=None):
     """Events fixture as a file stream. The file stream source requires a
-    *directory*; stage the fixture file into a fresh temp dir (symlink:
-    no data copy). Pass ``schema`` to skip the inference read when
-    staging the same fixture twice (stream-stream joins)."""
-    import os
-
-    from .session import apply_runtime_confs
-
-    apply_runtime_confs(spark)
-    stage = tempfile.mkdtemp(prefix=f"evstream_{uuid.uuid4().hex[:8]}_")
+    *directory*; the fixture file is linked into the new directory
+    ``stage`` (no data copy). Pass ``schema`` to skip the schema lookup
+    when staging the same fixture twice (stream-stream joins). ``ts``
+    follows the shared recipe (sources/fixtures.py), so the batch oracles
+    and this stream read event time identically."""
+    os.makedirs(stage)
     os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
     if schema is None:
-        from .sources.fixtures import fixture_schema
-
         schema = fixture_schema(spark, sf_dir, "events")
-    from .sources.fixtures import normalize_events_ts
-
-    # the SHARED ts recipe (sources/fixtures.py) — batch oracles and
-    # this stream must read event time identically
     return normalize_events_ts(parquet_stream(spark, stage, schema=schema)), schema
+
+
+def _drain_to_memory(spark, df, output_mode, tmp):
+    """Drain ``df`` into a memory sink (checkpoint under ``tmp``) and
+    return its rows. The sink's temp view is dropped before returning:
+    the frame holds the rows, so they are freed with it instead of
+    staying in the session for good."""
+    name = os.path.basename(tmp)
+    with scoped_shuffle_partitions(spark, STREAM_SHUFFLE_PARTITIONS):
+        drain_available_now(
+            df.writeStream.outputMode(output_mode).format("memory").queryName(name),
+            f"{tmp}/ckpt",
+        )
+    rows = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return rows
+
+
+def _drain_to_files(spark, df, sink, tmp):
+    """Drain ``df`` through the ``foreachBatch`` hook ``sink`` with the
+    checkpoint under ``tmp`` and the stateful drains' shuffle width."""
+    with scoped_shuffle_partitions(spark, STREAM_SHUFFLE_PARTITIONS):
+        run_available_now(df, sink, f"{tmp}/ckpt")
+
+
+def _orders_posts(spark, sf_dir):
+    """orders as POST_SCHEMA rows (uri and cid from the order key, key
+    from the priority, indexedAt from the order date) plus the order key
+    as ``k``: the input of the orders-based ACID and change-feed audits.
+    The explicit schema skips a per-call footer inference."""
+    orders = spark.read.schema(fixture_schema(spark, sf_dir, "orders")).parquet(
+        os.path.join(sf_dir, "orders.parquet")
+    )
+    return orders.select(
+        F.format_string("o:%09d", F.col("o_orderkey")).alias("uri"),
+        F.col("o_orderpriority").alias("key"),
+        F.format_string("c%09d", F.col("o_orderkey")).alias("cid"),
+        F.lit(None).cast("string").alias("replyParent"),
+        F.lit(None).cast("string").alias("replyRoot"),
+        F.col("o_orderdate").alias("indexedAt"),
+        F.col("o_orderkey").alias("k"),
+    )
 
 
 @register(
@@ -92,22 +121,21 @@ def w1_stream_upsert(spark, sf_dir):
     anti-join sink, then the final store contents returned. Matching the
     batch oracle proves exactly-once upsert semantics across the
     stream/batch boundary."""
-    stream, _ = _events_stream(spark, sf_dir)
-    posts = stream.select(
-        F.concat(F.lit("ev:"), F.col("event_id").cast("string")).alias("uri"),
-        F.col("event_type").alias("key"),
-        F.format_string("c%09d", F.col("event_id")).alias("cid"),
-        F.lit(None).cast("string").alias("replyParent"),
-        F.lit(None).cast("string").alias("replyRoot"),
-        F.col("ts").alias("indexedAt"),
-    )
-    tmp = tempfile.mkdtemp(prefix=f"w1_{uuid.uuid4().hex[:8]}_")
-    store = PostStore(spark, f"{tmp}/store")
-    with _stream_shuffle(spark):
-        run_available_now(posts, foreach_batch_upsert(store), f"{tmp}/ckpt")
-    return store.read().select(
-        "uri", "key", F.unix_micros("indexedAt").alias("ts_us")
-    )
+    with tempfile.TemporaryDirectory(prefix="w1_") as tmp:
+        stream, _ = _events_stream(spark, sf_dir, f"{tmp}/events")
+        posts = stream.select(
+            F.concat(F.lit("ev:"), F.col("event_id").cast("string")).alias("uri"),
+            F.col("event_type").alias("key"),
+            F.format_string("c%09d", F.col("event_id")).alias("cid"),
+            F.lit(None).cast("string").alias("replyParent"),
+            F.lit(None).cast("string").alias("replyRoot"),
+            F.col("ts").alias("indexedAt"),
+        )
+        store = PostStore(spark, f"{tmp}/store")
+        _drain_to_files(spark, posts, foreach_batch_upsert(store), tmp)
+        return store.read().select(
+            "uri", "key", F.unix_micros("indexedAt").alias("ts_us")
+        ).localCheckpoint(eager=True)
 
 
 @register(
@@ -122,24 +150,11 @@ def w2_stateful_running_stats(spark, sf_dir):
     in the state store. Drained availableNow in one batch, the final
     emission per key must equal the batch group-by — proving the state
     path computes the same totals the batch engine does."""
-    stream, _ = _events_stream(spark, sf_dir)
-    from .streaming import stream_running_stats
-
-    posts = stream.select(F.col("event_type").alias("key"), F.col("ts").alias("indexedAt"))
-    stats = stream_running_stats(posts)
-    table = f"runstats_{uuid.uuid4().hex[:8]}"
-    tmp = tempfile.mkdtemp(prefix="w2s_")
-    with _stream_shuffle(spark):
-        q = (
-            stats.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    return spark.table(table).select("key", "n_total")
+    with tempfile.TemporaryDirectory(prefix="w2_") as tmp:
+        stream, _ = _events_stream(spark, sf_dir, f"{tmp}/events")
+        posts = stream.select(F.col("event_type").alias("key"), F.col("ts").alias("indexedAt"))
+        stats = _drain_to_memory(spark, stream_running_stats(posts), "update", tmp)
+    return stats.select("key", "n_total")
 
 
 @register(
@@ -154,22 +169,11 @@ def w8_stream_tumbling_counts(spark, sf_dir):
     """W8: event-time tumbling-window aggregation with watermark, drained
     with availableNow in complete mode; the final window set must equal
     the batch group-by."""
-    stream, _ = _events_stream(spark, sf_dir)
-    agg = windowed_counts(stream, ts_col="ts", key_col="event_type",
-                          window="1 day", watermark="1 hour")
-    table = f"wincounts_{uuid.uuid4().hex[:8]}"
-    tmp = tempfile.mkdtemp(prefix="w8_")
-    with _stream_shuffle(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    return spark.table(table)
+    with tempfile.TemporaryDirectory(prefix="w8_") as tmp:
+        stream, _ = _events_stream(spark, sf_dir, f"{tmp}/events")
+        agg = windowed_counts(stream, ts_col="ts", key_col="event_type",
+                              window="1 day", watermark="1 hour")
+        return _drain_to_memory(spark, agg, "complete", tmp)
 
 
 @register(
@@ -194,56 +198,42 @@ def w_stream_interval_join(spark, sf_dir):
     The strongest check available for a stateful stream-stream operator:
     same rows a batch engine would produce, computed with bounded join
     state."""
-    from .streaming import stream_interval_join
-
-    s1, schema = _events_stream(spark, sf_dir)
-    s2, _ = _events_stream(spark, sf_dir, schema=schema)
-    purchases = s1.filter(F.col("event_type") == "purchase").select(
-        "event_id", F.col("ts").alias("p_ts")
-    )
-    clicks = s2.filter(F.col("event_type") == "click").select(
-        F.col("ts").alias("c_ts")
-    )
-    joined = stream_interval_join(
-        purchases, clicks, "p_ts", "c_ts", RANGE_WIDTH_US, watermark="1 hour"
-    )
-    tmp = tempfile.mkdtemp(prefix="wij_")
-    out_dir = f"{tmp}/partials"
-    # empty-drain safety WITHOUT the seed-write job (optimization r14):
-    # the final read passes the partials schema explicitly, so an empty
-    # drain (no pairs, or no batch at all) reads the bare directory as a
-    # 0-row frame — the old zero-row seed file bought exactly that for
-    # the price of a full parquet write+commit per call
-    import os as _os
-
-    _os.makedirs(out_dir, exist_ok=True)
-
-    # aggregate inside foreachBatch and append the per-batch partial
-    # counts as parquet — the raw pair set never funnels through the
-    # driver (a memory sink collects every row); partials sum to exact
-    # totals because the join emits each pair exactly once
-    def sink(bdf, _bid):
-        (
-            bdf.groupBy("event_id")
-            .agg(F.count("*").alias("n"))
-            .write.mode("append")
-            .parquet(out_dir)
+    with tempfile.TemporaryDirectory(prefix="wij_") as tmp:
+        s1, schema = _events_stream(spark, sf_dir, f"{tmp}/events_p")
+        s2, _ = _events_stream(spark, sf_dir, f"{tmp}/events_c", schema=schema)
+        purchases = s1.filter(F.col("event_type") == "purchase").select(
+            "event_id", F.col("ts").alias("p_ts")
         )
-
-    with _stream_shuffle(spark):
-        q = (
-            joined.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+        clicks = s2.filter(F.col("event_type") == "click").select(
+            F.col("ts").alias("c_ts")
         )
-        _drain(q)
-    return (
-        spark.read.schema("event_id long, n long").parquet(out_dir)
-        .groupBy("event_id")
-        .agg(F.sum("n").cast("bigint").alias("n_in_range"))
-    )
+        joined = stream_interval_join(
+            purchases, clicks, "p_ts", "c_ts", RANGE_WIDTH_US, watermark="1 hour"
+        )
+        # the final read names the partials schema, so an empty drain (no
+        # pairs, or no batch at all) reads the bare directory as 0 rows
+        out_dir = f"{tmp}/partials"
+        os.makedirs(out_dir)
+
+        # aggregate inside foreachBatch and append the per-batch partial
+        # counts as parquet — the raw pair set never funnels through the
+        # driver (a memory sink collects every row); partials sum to exact
+        # totals because the join emits each pair exactly once
+        def sink(bdf, _bid):
+            (
+                bdf.groupBy("event_id")
+                .agg(F.count("*").alias("n"))
+                .write.mode("append")
+                .parquet(out_dir)
+            )
+
+        _drain_to_files(spark, joined, sink, tmp)
+        return (
+            spark.read.schema("event_id long, n long").parquet(out_dir)
+            .groupBy("event_id")
+            .agg(F.sum("n").cast("bigint").alias("n_in_range"))
+            .localCheckpoint(eager=True)
+        )
 
 
 @register(
@@ -270,26 +260,13 @@ def w_stream_sliding_counts(spark, sf_dir):
     microsecond math, so the streamed final state matches the SQL
     replay row-for-row.  State is O(4 × keys) per the sliding_counts
     docstring; complete-mode availableNow drain like w8."""
-    from .streaming import sliding_counts
-
-    stream, _ = _events_stream(spark, sf_dir)
-    agg = sliding_counts(
-        stream, ts_col="ts", key_col="event_type",
-        window="1 day", slide="6 hours", watermark="1 hour",
-    )
-    table = f"slidecounts_{uuid.uuid4().hex[:8]}"
-    tmp = tempfile.mkdtemp(prefix="wslide_")
-    with _stream_shuffle(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+    with tempfile.TemporaryDirectory(prefix="wslide_") as tmp:
+        stream, _ = _events_stream(spark, sf_dir, f"{tmp}/events")
+        agg = sliding_counts(
+            stream, ts_col="ts", key_col="event_type",
+            window="1 day", slide="6 hours", watermark="1 hour",
         )
-        _drain(q)
-    return spark.table(table)
+        return _drain_to_memory(spark, agg, "complete", tmp)
 
 
 PATTERN_WIDTH_US = 6 * 3600 * 1_000_000  # dozens of matches per SF
@@ -324,25 +301,12 @@ def w_stream_pattern_match(spark, sf_dir):
     `range_join_click_attribution`, and the strongest check available
     for a custom applyInPandasWithState operator (bit-equal rows vs a
     batch engine)."""
-    from .streaming.stateful import stream_pattern_matches
-
-    stream, _ = _events_stream(spark, sf_dir)
-    # _events_stream already derives ts_us (both fixture generations);
-    # re-deriving here risked silently following a different recipe
-    matched = stream_pattern_matches(stream, within_us=PATTERN_WIDTH_US)
-    table = f"patmatch_{uuid.uuid4().hex[:8]}"
-    tmp = tempfile.mkdtemp(prefix="wpat_")
-    with _stream_shuffle(spark):
-        q = (
-            matched.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    return spark.table(table)
+    with tempfile.TemporaryDirectory(prefix="wpat_") as tmp:
+        # the operator reads the ts_us _events_stream derives, so it follows
+        # the same event-time recipe as the oracle for every fixture
+        stream, _ = _events_stream(spark, sf_dir, f"{tmp}/events")
+        matched = stream_pattern_matches(stream, within_us=PATTERN_WIDTH_US)
+        return _drain_to_memory(spark, matched, "append", tmp)
 
 
 # --------------------------------------------------------------------------
@@ -405,16 +369,9 @@ def acid_table_audit(spark, sf_dir):
     commit; time travel and CDF read only the files the interval's
     commits name. The per-version aggregates here are full-snapshot
     scans by design (it is an audit); the per-step collect is 1 row."""
-    import os
-
-    from .table_format import TxnLogFormat
-
-    from .sources.fixtures import fixture_schema
-
-    # explicit schema through the fixture catalog (optimization r14):
-    # identical RAW frame (ts stays in its native representation — the
-    # normalized load_table form would change indexedAt), no per-call
-    # footer inference
+    # the RAW frame through the fixture catalog's schema: ts stays in its
+    # native representation (the normalized load_table form would change
+    # indexedAt), and no per-call footer inference runs
     ev = spark.read.schema(fixture_schema(spark, sf_dir, "events")).parquet(
         os.path.join(sf_dir, "events.parquet")
     )
@@ -429,48 +386,46 @@ def acid_table_audit(spark, sf_dir):
         F.col("ts").alias("indexedAt"),
         F.col("event_id"),
     )
-    tmp = tempfile.mkdtemp(prefix=f"acid_{uuid.uuid4().hex[:8]}_")
-    fmt = TxnLogFormat(spark, f"{tmp}/table")
-
-    post_cols = ["uri", "key", "cid", "replyParent", "replyRoot", "indexedAt"]
-    fmt.append(posts.filter(F.col("event_id") < 4000).select(post_cols))
-    v1 = fmt.history()[-1]["version"]
-    batch = (
-        posts.filter((F.col("event_id") >= 2000) & (F.col("event_id") < 6000))
-        .withColumn(
-            "cid",
-            F.format_string(
-                "c%09d",
-                F.expr("CAST(substring(cid, 2) AS BIGINT) + 1000000"),
-            ),
+    with tempfile.TemporaryDirectory(prefix="acid_") as tmp:
+        fmt = TxnLogFormat(spark, f"{tmp}/table")
+        fmt.append(posts.filter(F.col("event_id") < 4000).select(POST_COLS))
+        v1 = fmt.history()[-1]["version"]
+        batch = (
+            posts.filter((F.col("event_id") >= 2000) & (F.col("event_id") < 6000))
+            .withColumn(
+                "cid",
+                F.format_string(
+                    "c%09d",
+                    F.expr("CAST(substring(cid, 2) AS BIGINT) + 1000000"),
+                ),
+            )
+            .select(POST_COLS)
         )
-        .select(post_cols)
-    )
-    fmt.merge(batch, on=["uri"])
-    v2 = fmt.history()[-1]["version"]
-    fmt.delete_partition("click")
-    v3 = fmt.history()[-1]["version"]
+        fmt.merge(batch, on=["uri"])
+        v2 = fmt.history()[-1]["version"]
+        fmt.delete_partition("click")
+        v3 = fmt.history()[-1]["version"]
 
-    ident = ["uri", "key", "cid"]  # full row identity (no nullable cols)
-    rows = []
-    ops = ["append", "merge", "delete"]
-    intervals = [(v1 - 1, v1), (v1, v2), (v2, v3)]
-    for step, (va, vb) in enumerate(intervals, start=1):
-        snap = fmt.read(spark, version=vb)
-        agg = snap.agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum(F.expr("CAST(substring(cid, 2) AS BIGINT)")), F.lit(0)
-            ).alias("chk"),
-        ).head()
-        cdf = fmt.changes_between(spark, va, vb).select(*ident, "_change")
-        ins = cdf.filter(F.col("_change") == "insert").drop("_change")
-        dels = cdf.filter(F.col("_change") == "delete").drop("_change")
-        net_ins = ins.join(dels, on=ident, how="left_anti").count()
-        net_del = dels.join(ins, on=ident, how="left_anti").count()
-        rows.append(
-            (step, ops[step - 1], agg["n"], int(agg["chk"]), net_ins, net_del)
-        )
+        ident = ["uri", "key", "cid"]  # full row identity (no nullable cols)
+        rows = []
+        ops = ["append", "merge", "delete"]
+        intervals = [(v1 - 1, v1), (v1, v2), (v2, v3)]
+        for step, (va, vb) in enumerate(intervals, start=1):
+            snap = fmt.read(spark, version=vb)
+            agg = snap.agg(
+                F.count("*").alias("n"),
+                F.coalesce(
+                    F.sum(F.expr("CAST(substring(cid, 2) AS BIGINT)")), F.lit(0)
+                ).alias("chk"),
+            ).head()
+            cdf = fmt.changes_between(spark, va, vb).select(*ident, "_change")
+            ins = cdf.filter(F.col("_change") == "insert").drop("_change")
+            dels = cdf.filter(F.col("_change") == "delete").drop("_change")
+            net_ins = ins.join(dels, on=ident, how="left_anti").count()
+            net_del = dels.join(ins, on=ident, how="left_anti").count()
+            rows.append(
+                (step, ops[step - 1], agg["n"], int(agg["chk"]), net_ins, net_del)
+            )
     return spark.createDataFrame(
         rows,
         "step bigint, op string, n_rows bigint, checksum bigint, "
@@ -518,25 +473,13 @@ def w_stream_session_counts(spark, sf_dir):
     forever: its end never passes the final watermark. On an unbounded
     production stream the same plan runs append mode and trades that
     emission lag for state bounded by (open sessions) x keys."""
-    from .streaming import session_counts
-
-    stream, _ = _events_stream(spark, sf_dir)
-    sess = session_counts(
-        stream, ts_col="ts", key_col="user_id", gap="30 minutes", watermark="1 hour"
-    )
-    table = f"sesscounts_{uuid.uuid4().hex[:8]}"
-    tmp = tempfile.mkdtemp(prefix="wsess_")
-    with _stream_shuffle(spark):
-        q = (
-            sess.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(table)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+    with tempfile.TemporaryDirectory(prefix="wsess_") as tmp:
+        stream, _ = _events_stream(spark, sf_dir, f"{tmp}/events")
+        sess = session_counts(
+            stream, ts_col="ts", key_col="user_id", gap="30 minutes", watermark="1 hour"
         )
-        _drain(q)
-    return spark.table(table).select(
+        sess = _drain_to_memory(spark, sess, "complete", tmp)
+    return sess.select(
         "user_id",
         F.unix_micros("win_start").alias("sess_start_us"),
         F.unix_micros("win_end").alias("sess_end_us"),
@@ -560,41 +503,26 @@ def w_stream_dedup(spark, sf_dir):
     state-bounded form of the reference's stored-URI membership set
     (J2/W2). Key-only projection keeps the result deterministic (which
     physical row is 'first' within a batch is not)."""
-    from .streaming import stream_dedup
-
-    stream, _ = _events_stream(spark, sf_dir)
-    deduped = stream_dedup(
-        stream.select("user_id", "event_type", "ts"),
-        keys=["user_id", "event_type"],
-        ts_col="ts",
-        watermark="90 days",
-    ).select("user_id", "event_type")
-    tmp = tempfile.mkdtemp(prefix="wdedup_")
-    out_dir = f"{tmp}/out"
-    # empty-drain safety via explicit read schema (optimization r14) —
-    # replaces the zero-row seed file's write+commit job
-    import os as _os
-
-    _os.makedirs(out_dir, exist_ok=True)
-
-    def sink(bdf, _bid):
-        bdf.write.mode("append").parquet(out_dir)
-
-    with _stream_shuffle(spark):
-        q = (
-            deduped.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+    with tempfile.TemporaryDirectory(prefix="wdedup_") as tmp:
+        stream, _ = _events_stream(spark, sf_dir, f"{tmp}/events")
+        deduped = stream_dedup(
+            stream.select("user_id", "event_type", "ts"),
+            keys=["user_id", "event_type"],
+            ts_col="ts",
+            watermark="90 days",
+        ).select("user_id", "event_type")
+        # the explicit read schema makes an empty drain a 0-row frame
+        out_dir = f"{tmp}/out"
+        os.makedirs(out_dir)
+        _drain_to_files(
+            spark, deduped, lambda bdf, _bid: bdf.write.mode("append").parquet(out_dir), tmp
         )
-        _drain(q)
-    # cross-batch safety: within-watermark duplicates are already
-    # dropped by the operator; a distinct here collapses nothing on the
-    # single-batch drain but keeps the contract under any batching
-    return spark.read.schema(
-        "user_id long, event_type string"
-    ).parquet(out_dir).distinct()
+        # cross-batch safety: within-watermark duplicates are already
+        # dropped by the operator; a distinct here collapses nothing on the
+        # single-batch drain but keeps the contract under any batching
+        return spark.read.schema(
+            "user_id long, event_type string"
+        ).parquet(out_dir).distinct().localCheckpoint(eager=True)
 
 
 @register(
@@ -619,124 +547,98 @@ def w_stream_static_enrich(spark, sf_dir):
     broadcasts it only while it fits autoBroadcastJoinThreshold (always
     at bench scale) and shuffle-joins each micro-batch against the
     partitioned dim beyond that; no stream-side state either way."""
-    from .sources.fixtures import load_table as _lt
-    from .streaming.pipeline import stream_static_enrich
-
-    stream, _ = _events_stream(spark, sf_dir)
-    cust = _lt(spark, sf_dir, "customer").select(
+    cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
-    # broadcast_dim=False: customer scales with SF; the library helper
-    # now carries the hint-free option, so the hand-rolled join is gone
-    enriched = stream_static_enrich(
-        stream, cust, "user_id", how="inner", broadcast_dim=False
-    )
-    tmp = tempfile.mkdtemp(prefix="wenrich_")
-    out_dir = f"{tmp}/partials"
-    spark.createDataFrame(
-        [], "c_mktsegment string, event_type string, n long"
-    ).write.mode("append").parquet(out_dir)
-
-    def sink(bdf, _bid):
-        (
-            bdf.groupBy("c_mktsegment", "event_type")
-            .agg(F.count("*").alias("n"))
-            .write.mode("append")
-            .parquet(out_dir)
+    with tempfile.TemporaryDirectory(prefix="wenrich_") as tmp:
+        stream, _ = _events_stream(spark, sf_dir, f"{tmp}/events")
+        # broadcast_dim=False: customer scales with SF
+        enriched = stream_static_enrich(
+            stream, cust, "user_id", how="inner", broadcast_dim=False
         )
+        # the explicit read schema makes an empty drain a 0-row frame
+        out_dir = f"{tmp}/partials"
+        os.makedirs(out_dir)
 
-    with _stream_shuffle(spark):
-        q = (
-            enriched.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    return (
-        spark.read.parquet(out_dir)
-        .groupBy("c_mktsegment", "event_type")
-        .agg(F.sum("n").cast("bigint").alias("n"))
-    )
-
-
-def _write_sentinels_pyarrow(stage: str, src_path: str, sentinel_id: int) -> bool:
-    """Fast path for w_stream_outer_join's watermark sentinels: build the
-    two 2-row far-future parquet files driver-side with pyarrow, taking
-    max(ts) from the source file's footer statistics (exact for
-    timestamp columns; every row group must carry min/max).  Returns
-    False — caller falls back to the Spark path — whenever the fixture
-    does not match the supported shape exactly: the 6-column events
-    layout with a microsecond timestamp ``ts``."""
-    import datetime as _dt
-    import os as _os
-    import time as _tm
-
-    written: list = []
-    try:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        pf = pq.ParquetFile(src_path)
-        sch = pf.schema_arrow
-        names = [f.name for f in sch]
-        if names != ["event_id", "ts", "user_id", "event_type", "value", "props"]:
-            return False
-        expect = [
-            pa.int64(), pa.timestamp("us"), pa.int64(),
-            pa.string(), pa.float64(), pa.string(),
-        ]
-        if [f.type for f in sch] != expect:
-            return False
-        md = pf.metadata
-        ts_idx = names.index("ts")
-        mx = None
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(ts_idx).statistics
-            if st is None or not st.has_min_max:
-                return False
-            mx = st.max if mx is None else max(mx, st.max)
-        if mx is None:
-            return False
-        sch = sch.remove_metadata()
-        for i, days in enumerate((365, 366)):
-            far = mx + _dt.timedelta(days=days)
-            tbl = pa.table(
-                {
-                    "event_id": pa.array(
-                        [sentinel_id + 2 * i, sentinel_id + 2 * i + 1], pa.int64()
-                    ),
-                    "ts": pa.array([far, far], pa.timestamp("us")),
-                    "user_id": pa.array([0, 0], pa.int64()),
-                    "event_type": pa.array(["purchase", "click"], pa.string()),
-                    "value": pa.array([0.0, 0.0], pa.float64()),
-                    "props": pa.array(["{}", "{}"], pa.string()),
-                },
-                schema=sch,
+        def sink(bdf, _bid):
+            (
+                bdf.groupBy("c_mktsegment", "event_type")
+                .agg(F.count("*").alias("n"))
+                .write.mode("append")
+                .parquet(out_dir)
             )
-            tgt = f"{stage}/z_sentinel_{i}.parquet"
-            written.append(tgt)
-            pq.write_table(tbl, tgt)
-            _os.utime(tgt, (_tm.time() + 100 + 10 * i,) * 2)
-        return True
-    except Exception as exc:
-        # ADVICE r14: surface WHY the fast path bailed (a silent bare
-        # except lets pyarrow API drift disable it forever unnoticed),
-        # and remove any partially written sentinel rather than relying
-        # on the Spark fallback overwriting the same target names.
-        import logging
 
-        logging.getLogger(__name__).warning(
-            "pyarrow sentinel fast path failed, falling back to Spark: %r", exc
+        _drain_to_files(spark, enriched, sink, tmp)
+        return (
+            spark.read.schema("c_mktsegment string, event_type string, n long")
+            .parquet(out_dir)
+            .groupBy("c_mktsegment", "event_type")
+            .agg(F.sum("n").cast("bigint").alias("n"))
+            .localCheckpoint(eager=True)
         )
-        for tgt in written:
-            try:
-                if _os.path.exists(tgt):
-                    _os.remove(tgt)
-            except OSError:
-                pass  # one failed remove must not skip the rest
-        return False
+
+
+def _stage_events_with_sentinels(stage: str, src: str, sentinel_id: int) -> None:
+    """Link the events fixture ``src`` into the new directory ``stage``
+    and add w_stream_outer_join's two far-future watermark sentinel
+    files after it. ``src`` is one ``events.parquet`` file or the
+    directory of part files tools/make_scale_fixture.py writes. The
+    sentinels are built in-process with pyarrow, taking max(ts) from
+    the parquet footer statistics (exact for timestamp columns), so no
+    Spark job runs. Any other layout — another column set, a
+    non-microsecond ``ts``, a row group without min/max — raises
+    ValueError."""
+    import datetime as dt
+    import glob
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    expect = [
+        ("event_id", pa.int64()), ("ts", pa.timestamp("us")), ("user_id", pa.int64()),
+        ("event_type", pa.string()), ("value", pa.float64()), ("props", pa.string()),
+    ]
+    files = sorted(glob.glob(f"{src}/*.parquet")) if os.path.isdir(src) else [src]
+    schema, mx = None, None
+    for path in files:
+        pf = pq.ParquetFile(path)
+        schema = pf.schema_arrow.remove_metadata()
+        if [(f.name, f.type) for f in schema] != expect:
+            raise ValueError(
+                f"w_stream_outer_join: {path} has columns {schema}, "
+                f"expected {expect}"
+            )
+        for rg in range(pf.metadata.num_row_groups):
+            st = pf.metadata.row_group(rg).column(1).statistics
+            if st is None or not st.has_min_max:
+                raise ValueError(
+                    f"w_stream_outer_join: row group {rg} of {path} has no ts min/max"
+                )
+            mx = st.max if mx is None else max(mx, st.max)
+    if mx is None:
+        raise ValueError(f"w_stream_outer_join: no event rows under {src}")
+    os.makedirs(stage)
+    for i, path in enumerate(files):
+        os.symlink(os.path.abspath(path), f"{stage}/a_{i:05d}.parquet")
+    for i, days in enumerate((365, 366)):
+        far = mx + dt.timedelta(days=days)
+        tbl = pa.table(
+            {
+                "event_id": [sentinel_id + 2 * i, sentinel_id + 2 * i + 1],
+                "ts": [far, far],
+                "user_id": [0, 0],
+                "event_type": ["purchase", "click"],
+                "value": [0.0, 0.0],
+                "props": ["{}", "{}"],
+            },
+            schema=schema,
+        )
+        tgt = f"{stage}/z_sentinel_{i}.parquet"
+        pq.write_table(tbl, tgt)
+        # the file source orders by mtime: each sentinel is its own
+        # trigger, after every data file
+        os.utime(tgt, (time.time() + 100 + 10 * i,) * 2)
 
 
 @register(
@@ -760,18 +662,17 @@ def w_stream_outer_join(spark, sf_dir):
 
     Outer rows only emit when the watermark PROVES no match can still
     arrive; at end-of-stream the engine would otherwise retain the
-    tail\'s unmatched rows in state forever. The drain therefore appends
-    three far-future sentinel files (later mtimes, one file per
-    trigger): a purchase-typed and a click-typed sentinel per file, so
-    BOTH streams\' watermark nodes advance (global watermark = min over
-    inputs), the later sentinel batches run with the watermark already
-    past every real window, and the closing no-data micro-batch flushes
-    the remaining state. Result == plain batch LEFT JOIN — exactly what
+    tail's unmatched rows in state forever. The drain therefore appends
+    two far-future sentinel files (later mtimes, one file per trigger):
+    a purchase-typed and a click-typed sentinel per file, so BOTH
+    streams' watermark nodes advance (global watermark = min over
+    inputs). The watermark folds in one batch late, so the second
+    sentinel batch and the engine's closing no-data micro-batch both run
+    with it past every real window and flush the remaining state. Result == plain batch LEFT JOIN — exactly what
     the oracle runs; 194/202 zero-click purchases at sf0.001 prove the
     null path dominates, not the inner residue.
 
-    HARD-WON PLAN CONSTRAINT (kept as a regression comment): sentinels
-    must be excluded AFTER the drain, in the batch read of the partials
+    PLAN CONSTRAINT: sentinels must be excluded AFTER the drain, in the batch read of the partials
     — any sentinel-excluding filter on the streaming result is legal to
     PUSH DOWN through the left-outer join into the left scan, where it
     silently drops the left sentinels BEFORE the watermark node and the
@@ -782,124 +683,45 @@ def w_stream_outer_join(spark, sf_dir):
     eviction (bucket-equi keys keep the state store hash-partitioned);
     the raw pair set never funnels through the driver — per-batch
     partial counts append as parquet and a final sum merges them."""
-    import datetime
-    import glob
-    import os
-    import shutil
-    import time as _time
-
-    from .session import apply_runtime_confs
-    from .streaming import parquet_stream, stream_interval_join_outer
-
     SENTINEL_ID = 10**12
-    apply_runtime_confs(spark)
-    from .sources.fixtures import fixture_schema
-
-    schema = fixture_schema(spark, sf_dir, "events")
-    stage = tempfile.mkdtemp(prefix=f"wsoj_{uuid.uuid4().hex[:8]}_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/a_events.parquet")
-    # Sentinel construction is DRIVER-SIDE HARNESS WORK, not data
-    # computation — the fast path (optimization r14) builds the two
-    # 2-row far-future files with pyarrow and takes max(ts) from the
-    # parquet FOOTER STATISTICS (exact for int64/timestamp columns):
-    # zero Spark jobs, where the old path paid one max() aggregate job
-    # plus two repartition(1) writes (~0.4 s each) per call.  Falls back
-    # to the original Spark path for any fixture generation the fast
-    # path does not recognize (legacy ns-BIGINT ts, missing stats,
-    # unexpected column layout).
-    if not _write_sentinels_pyarrow(
-        stage, f"{sf_dir}/events.parquet", SENTINEL_ID
-    ):
-        batch_ev = spark.read.schema(schema).parquet(f"{sf_dir}/events.parquet")
-        # legacy fixture support (same branch as _events_stream /
-        # sources/fixtures.py): a BIGINT ts is NANOSECONDS since epoch —
-        # cast("timestamp") would read it as SECONDS, and a datetime
-        # sentinel against the LongType schema field raises outright, so
-        # sentinels must be built in the fixture's native representation
-        legacy_ns = dict(batch_ev.dtypes).get("ts") == "bigint"
-        if legacy_ns:
-            mx_ns = batch_ev.agg(F.max("ts")).collect()[0][0]
-
-            def _far(days: int):
-                return mx_ns + days * 86400 * 10**9
-
-        else:
-            mx = batch_ev.agg(
-                F.max(F.col("ts").cast("timestamp"))
-            ).collect()[0][0]
-
-            def _far(days: int):
-                return mx + datetime.timedelta(days=days)
-
-        sent_dir = f"{stage}/_sentinels"
-        # two sentinel batches + the engine's closing no-data micro-batch:
-        # watermark folds in one batch late, so sentinel #2's batch and the
-        # no-data batch both run with the watermark past every real window
-        for i, days in enumerate((365, 366)):
-            far = _far(days)
-            spark.createDataFrame(
-                [
-                    (SENTINEL_ID + 2 * i, far, 0, "purchase", 0.0, "{}"),
-                    (SENTINEL_ID + 2 * i + 1, far, 0, "click", 0.0, "{}"),
-                ],
-                schema=schema,
-            ).repartition(1).write.mode("overwrite").parquet(sent_dir)
-            # repartition(1), NOT coalesce(1): coalescing a parallelized
-            # local relation into one task measured ~4.6 s per 2-row write
-            # on local[32]; the repartitioned form is ~0.4 s
-            part = glob.glob(f"{sent_dir}/part-*.parquet")[0]
-            tgt = f"{stage}/z_sentinel_{i}.parquet"
-            shutil.copy(part, tgt)
-            os.utime(tgt, (_time.time() + 100 + 10 * i,) * 2)
-        shutil.rmtree(sent_dir, ignore_errors=True)
-
-    from .sources.fixtures import normalize_events_ts
-
-    # shared recipe (sources/fixtures.py); the legacy_ns branch above
-    # still exists because SENTINELS must be built in the fixture's
-    # NATIVE representation before normalization
-    s = normalize_events_ts(
-        parquet_stream(spark, stage, schema=schema, max_files_per_trigger=1)
-    )
-    purchases = s.filter(F.col("event_type") == "purchase").select(
-        "event_id", F.col("ts").alias("p_ts")
-    )
-    clicks = s.filter(F.col("event_type") == "click").select(
-        F.col("ts").alias("c_ts")
-    )
-    joined = stream_interval_join_outer(
-        purchases, clicks, "p_ts", "c_ts", RANGE_WIDTH_US, watermark="90 days"
-    )
-
-    tmp = tempfile.mkdtemp(prefix=f"wsoj_out_{uuid.uuid4().hex[:8]}_")
-    out_dir = f"{tmp}/partials"
-    # empty-drain safety via explicit read schema (optimization r14) —
-    # replaces the zero-row seed file's write+commit job
-    os.makedirs(out_dir, exist_ok=True)
-
-    def sink(bdf, _bid):
-        (
-            bdf.groupBy("event_id")
-            .agg(F.count("c_ts").alias("n"))
-            .write.mode("append")
-            .parquet(out_dir)
+    with tempfile.TemporaryDirectory(prefix="wsoj_") as tmp:
+        stage = f"{tmp}/events"
+        _stage_events_with_sentinels(stage, f"{sf_dir}/events.parquet", SENTINEL_ID)
+        s = normalize_events_ts(
+            parquet_stream(
+                spark, stage, schema=fixture_schema(spark, sf_dir, "events"),
+                max_files_per_trigger=1,
+            )
         )
-
-    with _stream_shuffle(spark):
-        q = (
-            joined.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+        purchases = s.filter(F.col("event_type") == "purchase").select(
+            "event_id", F.col("ts").alias("p_ts")
         )
-        _drain(q)
-    return (
-        spark.read.schema("event_id long, n long").parquet(out_dir)
-        .filter(F.col("event_id") < SENTINEL_ID)
-        .groupBy("event_id")
-        .agg(F.sum("n").cast("bigint").alias("n_in_range"))
-    )
+        clicks = s.filter(F.col("event_type") == "click").select(
+            F.col("ts").alias("c_ts")
+        )
+        joined = stream_interval_join_outer(
+            purchases, clicks, "p_ts", "c_ts", RANGE_WIDTH_US, watermark="90 days"
+        )
+        # the explicit read schema makes an empty drain a 0-row frame
+        out_dir = f"{tmp}/partials"
+        os.makedirs(out_dir)
+
+        def sink(bdf, _bid):
+            (
+                bdf.groupBy("event_id")
+                .agg(F.count("c_ts").alias("n"))
+                .write.mode("append")
+                .parquet(out_dir)
+            )
+
+        _drain_to_files(spark, joined, sink, tmp)
+        return (
+            spark.read.schema("event_id long, n long").parquet(out_dir)
+            .filter(F.col("event_id") < SENTINEL_ID)
+            .groupBy("event_id")
+            .agg(F.sum("n").cast("bigint").alias("n_in_range"))
+            .localCheckpoint(eager=True)
+        )
 
 
 @register(
@@ -950,72 +772,53 @@ def acid_schema_evolution(spark, sf_dir):
     ALTER TABLE + backfill); reads NULL-fill old files via the logged
     per-version StructType, so a petabyte of history is never
     rewritten to add a column."""
-    import os
-
-    from .table_format import TxnLogFormat
-
-    from .sources.fixtures import fixture_schema
-
-    orders = spark.read.schema(fixture_schema(spark, sf_dir, "orders")).parquet(
-        os.path.join(sf_dir, "orders.parquet")
-    )
-    posts = orders.select(
-        F.format_string("o:%09d", F.col("o_orderkey")).alias("uri"),
-        F.col("o_orderpriority").alias("key"),
-        F.format_string("c%09d", F.col("o_orderkey")).alias("cid"),
-        F.lit(None).cast("string").alias("replyParent"),
-        F.lit(None).cast("string").alias("replyRoot"),
-        F.col("o_orderdate").alias("indexedAt"),
-        F.col("o_orderkey").alias("k"),
-    )
-    base_cols = ["uri", "key", "cid", "replyParent", "replyRoot", "indexedAt"]
-    tmp = tempfile.mkdtemp(prefix=f"acidse_{uuid.uuid4().hex[:8]}_")
-    fmt = TxnLogFormat(spark, f"{tmp}/table")
-
-    fmt.append(posts.filter(F.col("k") % 2 == 0).select(base_cols))
-    v1 = fmt.history()[-1]["version"]
-    fmt.append(
-        posts.filter(F.col("k") % 2 == 1)
-        .withColumn("qscore", (F.col("k") % 97).cast("bigint"))
-        .select(base_cols + ["qscore"])
-    )
-    v2 = fmt.history()[-1]["version"]
-    fmt.merge(
-        posts.filter(F.col("k") % 10 == 0)
-        .withColumn("qscore", (F.col("k") % 97).cast("bigint"))
-        .withColumn(
-            "lang",
-            F.element_at(
-                F.array(F.lit("en"), F.lit("de"), F.lit("fr")),
-                (F.col("k") % 3).cast("int") + 1,
-            ),
+    posts = _orders_posts(spark, sf_dir)
+    with tempfile.TemporaryDirectory(prefix="acidse_") as tmp:
+        fmt = TxnLogFormat(spark, f"{tmp}/table")
+        fmt.append(posts.filter(F.col("k") % 2 == 0).select(POST_COLS))
+        v1 = fmt.history()[-1]["version"]
+        fmt.append(
+            posts.filter(F.col("k") % 2 == 1)
+            .withColumn("qscore", (F.col("k") % 97).cast("bigint"))
+            .select(POST_COLS + ["qscore"])
         )
-        .select(base_cols + ["qscore", "lang"]),
-        on=["uri"],
-    )
-    v3 = fmt.history()[-1]["version"]
-
-    ops = ["append", "append_evolve", "merge_evolve"]
-    rows = []
-    for step, v in enumerate((v1, v2, v3), start=1):
-        snap = fmt.read(spark, version=v)
-        aggs = [F.count("*").alias("n")]
-        for c in ("qscore", "lang"):
-            aggs.append(
-                F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"{c}_nulls")
-                if c in snap.columns
-                else F.lit(-1).alias(f"{c}_nulls")
+        v2 = fmt.history()[-1]["version"]
+        fmt.merge(
+            posts.filter(F.col("k") % 10 == 0)
+            .withColumn("qscore", (F.col("k") % 97).cast("bigint"))
+            .withColumn(
+                "lang",
+                F.element_at(
+                    F.array(F.lit("en"), F.lit("de"), F.lit("fr")),
+                    (F.col("k") % 3).cast("int") + 1,
+                ),
             )
-        aggs.append(
-            F.coalesce(F.sum("qscore"), F.lit(0)).alias("qsum")
-            if "qscore" in snap.columns
-            else F.lit(-1).alias("qsum")
+            .select(POST_COLS + ["qscore", "lang"]),
+            on=["uri"],
         )
-        r = snap.agg(*aggs).head()
-        rows.append(
-            (step, ops[step - 1], int(r["n"]), len(snap.columns),
-             int(r["qscore_nulls"]), int(r["lang_nulls"]), int(r["qsum"]))
-        )
+        v3 = fmt.history()[-1]["version"]
+
+        ops = ["append", "append_evolve", "merge_evolve"]
+        rows = []
+        for step, v in enumerate((v1, v2, v3), start=1):
+            snap = fmt.read(spark, version=v)
+            aggs = [F.count("*").alias("n")]
+            for c in ("qscore", "lang"):
+                aggs.append(
+                    F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"{c}_nulls")
+                    if c in snap.columns
+                    else F.lit(-1).alias(f"{c}_nulls")
+                )
+            aggs.append(
+                F.coalesce(F.sum("qscore"), F.lit(0)).alias("qsum")
+                if "qscore" in snap.columns
+                else F.lit(-1).alias("qsum")
+            )
+            r = snap.agg(*aggs).head()
+            rows.append(
+                (step, ops[step - 1], int(r["n"]), len(snap.columns),
+                 int(r["qscore_nulls"]), int(r["lang_nulls"]), int(r["qsum"]))
+            )
     return spark.createDataFrame(
         rows,
         "step int, op string, n_rows bigint, n_cols int, "
@@ -1056,65 +859,39 @@ def table_changes_stream(spark, sf_dir):
     InputPartition read EXECUTOR-side via pyarrow — a downstream
     incremental consumer (indexer, aggregate maintainer) processes
     O(changed files) per sync and its checkpoint IS the cursor."""
-    import os
-
-    from .sources.table_changes import register_table_changes_source
-    from .table_format import TxnLogFormat
-
     register_table_changes_source(spark)
-    from .sources.fixtures import fixture_schema
+    posts = _orders_posts(spark, sf_dir)
+    with tempfile.TemporaryDirectory(prefix="tcs_") as tmp:
+        fmt = TxnLogFormat(spark, f"{tmp}/table")
+        fmt.append(posts.filter(F.col("k") % 2 == 0).select(POST_COLS))
+        fmt.append(posts.filter(F.col("k") % 2 == 1).select(POST_COLS))
+        fmt.delete_partition("1-URGENT")
 
-    orders = spark.read.schema(fixture_schema(spark, sf_dir, "orders")).parquet(
-        os.path.join(sf_dir, "orders.parquet")
-    )
-    posts = orders.select(
-        F.format_string("o:%09d", F.col("o_orderkey")).alias("uri"),
-        F.col("o_orderpriority").alias("key"),
-        F.format_string("c%09d", F.col("o_orderkey")).alias("cid"),
-        F.lit(None).cast("string").alias("replyParent"),
-        F.lit(None).cast("string").alias("replyRoot"),
-        F.col("o_orderdate").alias("indexedAt"),
-        F.col("o_orderkey").alias("k"),
-    )
-    cols = ["uri", "key", "cid", "replyParent", "replyRoot", "indexedAt"]
-    tmp = tempfile.mkdtemp(prefix=f"tcs_{uuid.uuid4().hex[:8]}_")
-    fmt = TxnLogFormat(spark, f"{tmp}/table")
-    fmt.append(posts.filter(F.col("k") % 2 == 0).select(cols))
-    fmt.append(posts.filter(F.col("k") % 2 == 1).select(cols))
-    fmt.delete_partition("1-URGENT")
-
-    stream = (
-        spark.readStream.format("starrysky_table_changes")
-        .option("path", f"{tmp}/table")
-        .load()
-    )
-    out = f"{tmp}/rows"
-    # empty-drain safety via explicit read schema (optimization r14) —
-    # replaces the zero-row seed file's write+commit job
-    out_schema = stream.schema
-    os.makedirs(out, exist_ok=True)
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda b, _i: b.write.mode("append").parquet(out)
+        stream = (
+            spark.readStream.format("starrysky_table_changes")
+            .option("path", f"{tmp}/table")
+            .load()
         )
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q)
-    return (
-        spark.read.schema(out_schema).parquet(out)
-        .groupBy(
-            F.col("_commit_version").alias("version"),
-            F.col("_change").alias("change"),
+        # the explicit read schema makes an empty drain a 0-row frame
+        out = f"{tmp}/rows"
+        os.makedirs(out)
+        _drain_to_files(
+            spark, stream, lambda b, _i: b.write.mode("append").parquet(out), tmp
         )
-        .agg(
-            F.count("*").cast("bigint").alias("n_rows"),
-            F.sum(F.expr("CAST(substring(cid, 2) AS BIGINT)"))
-            .cast("bigint")
-            .alias("key_sum"),
+        return (
+            spark.read.schema(stream.schema).parquet(out)
+            .groupBy(
+                F.col("_commit_version").alias("version"),
+                F.col("_change").alias("change"),
+            )
+            .agg(
+                F.count("*").cast("bigint").alias("n_rows"),
+                F.sum(F.expr("CAST(substring(cid, 2) AS BIGINT)"))
+                .cast("bigint")
+                .alias("key_sum"),
+            )
+            .localCheckpoint(eager=True)
         )
-    )
 
 
 @register(
@@ -1153,44 +930,28 @@ def acid_restore_audit(spark, sf_dir):
     100 TB shape: both restores are O(|files in either snapshot|)
     metadata commits — rolling back a petabyte costs the same as
     rolling back a megabyte."""
-    import os
+    posts = _orders_posts(spark, sf_dir)
+    with tempfile.TemporaryDirectory(prefix="acidres_") as tmp:
+        fmt = TxnLogFormat(spark, f"{tmp}/table")
+        fmt.append(posts.select(POST_COLS))
+        v1 = fmt.history()[-1]["version"]
+        fmt.delete_partition("1-URGENT")
+        v2 = fmt.history()[-1]["version"]
+        fmt.restore(v1)
+        v3 = fmt.history()[-1]["version"]
+        fmt.restore(v2)
+        v4 = fmt.history()[-1]["version"]
 
-    from .table_format import TxnLogFormat
-
-    from .sources.fixtures import fixture_schema
-
-    orders = spark.read.schema(fixture_schema(spark, sf_dir, "orders")).parquet(
-        os.path.join(sf_dir, "orders.parquet")
-    )
-    posts = orders.select(
-        F.format_string("o:%09d", F.col("o_orderkey")).alias("uri"),
-        F.col("o_orderpriority").alias("key"),
-        F.format_string("c%09d", F.col("o_orderkey")).alias("cid"),
-        F.lit(None).cast("string").alias("replyParent"),
-        F.lit(None).cast("string").alias("replyRoot"),
-        F.col("o_orderdate").alias("indexedAt"),
-    )
-    tmp = tempfile.mkdtemp(prefix=f"acidres_{uuid.uuid4().hex[:8]}_")
-    fmt = TxnLogFormat(spark, f"{tmp}/table")
-    fmt.append(posts)
-    v1 = fmt.history()[-1]["version"]
-    fmt.delete_partition("1-URGENT")
-    v2 = fmt.history()[-1]["version"]
-    fmt.restore(v1)
-    v3 = fmt.history()[-1]["version"]
-    fmt.restore(v2)
-    v4 = fmt.history()[-1]["version"]
-
-    ops = ["append", "delete", "restore", "restore_away"]
-    rows = []
-    for step, v in enumerate((v1, v2, v3, v4), start=1):
-        r = fmt.read(spark, version=v).agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum(F.expr("CAST(substring(cid, 2) AS BIGINT)")), F.lit(0)
-            ).alias("s"),
-        ).head()
-        rows.append((step, ops[step - 1], int(r["n"]), int(r["s"])))
+        ops = ["append", "delete", "restore", "restore_away"]
+        rows = []
+        for step, v in enumerate((v1, v2, v3, v4), start=1):
+            r = fmt.read(spark, version=v).agg(
+                F.count("*").alias("n"),
+                F.coalesce(
+                    F.sum(F.expr("CAST(substring(cid, 2) AS BIGINT)")), F.lit(0)
+                ).alias("s"),
+            ).head()
+            rows.append((step, ops[step - 1], int(r["n"]), int(r["s"])))
     return spark.createDataFrame(
         rows, "step int, op string, n_rows bigint, key_sum bigint"
     )

@@ -45,7 +45,7 @@ import contextlib
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -62,6 +62,11 @@ BM25_PART_SQL = (
     f"ln(1 + (n_docs - df + 0.5D) / (df + 0.5D)) * tf * {BM25_K1 + 1!r}D"
     f" / (tf + {BM25_K1!r}D * ({1 - BM25_B!r}D + {BM25_B!r}D * dl / avgdl))"
 )
+
+# the segment schemas, named by the probe's reads so that building a
+# probe plan infers nothing (a footer-reading job per read otherwise)
+POSTINGS_SCHEMA = "term string, doc_id bigint, tf bigint, gen bigint, term_bucket int"
+DL_SCHEMA = "doc_id bigint, dl bigint, gen bigint"
 
 
 class Bm25IncrementalIndex:
@@ -372,37 +377,34 @@ class Bm25IncrementalIndex:
 
     def probe(self, terms, top_k: int = 20) -> DataFrame:
         """Top-k BM25 over the query terms: the postings scan is pruned
-        to the terms' hash buckets (PartitionFilters on term_bucket), df
-        comes from the probe itself, dl is joined for candidate docs
-        only, and no text is tokenized.  Tombstone resolution is one
-        broadcast join over O(deletes-since-compact)."""
+        to the terms' hash buckets (PartitionFilters on term_bucket; the
+        bucket numbers are literals Catalyst folds, so building the plan
+        runs no job), df is a window count over that one scan, dl is
+        joined for candidate docs only, and no text is tokenized.
+        Tombstone resolution is one broadcast join over
+        O(deletes-since-compact)."""
         st = self._stats()
         # dedupe query terms: a repeated term would double its postings
         # after the join (inflating df -> wrong idf, and double-counting
         # its score contribution); BM25 is defined over the term SET
         terms = list(dict.fromkeys(terms))
         qt = self.spark.createDataFrame([(t,) for t in terms], "term string")
-        buckets = sorted(
-            {
-                r["b"]
-                for r in qt.select(
-                    (F.abs(F.hash("term")) % TERM_BUCKETS).alias("b")
-                ).collect()
-            }
+        buckets = [F.abs(F.hash(F.lit(t))) % TERM_BUCKETS for t in terms]
+        postings = (
+            self._live(
+                self.spark.read.schema(POSTINGS_SCHEMA)
+                .parquet(os.path.join(self.path, "postings"))
+                .filter(F.col("term_bucket").isin(*buckets))
+                .join(F.broadcast(qt), "term")
+            )
+            .withColumn("df", F.count("*").over(Window.partitionBy("term")))
         )
-        postings = self._live(
-            self.spark.read.parquet(os.path.join(self.path, "postings"))
-            .filter(F.col("term_bucket").isin(buckets))
-            .join(F.broadcast(qt), "term")
-        )
-        df_t = postings.groupBy("term").agg(F.count("*").alias("df"))
         dl = self._live(
-            self.spark.read.parquet(os.path.join(self.path, "dl"))
+            self.spark.read.schema(DL_SCHEMA).parquet(os.path.join(self.path, "dl"))
         )
         avgdl = st["total_dl"] / st["n_docs"] if st["n_docs"] else 0.0
         part = (
-            postings.join(F.broadcast(df_t), "term")
-            .join(dl.select("doc_id", "dl"), "doc_id")
+            postings.join(dl.select("doc_id", "dl"), "doc_id")
             .withColumns({"n_docs": F.lit(st["n_docs"]), "avgdl": F.lit(avgdl)})
             .select("doc_id", F.expr(BM25_PART_SQL).alias("part"))
         )

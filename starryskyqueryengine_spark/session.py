@@ -125,7 +125,7 @@ def scoped_shuffle_partitions(spark: SparkSession, n: int):
     query on the graph family). A production run sizes this to
     |nodes| / target-partition-rows before the loop — the same
     size-to-the-data rule as the streaming drains' state-store scoping
-    (catalog_stream._stream_shuffle); AQE coalescing handles the reads
+    (catalog_stream.STREAM_SHUFFLE_PARTITIONS); AQE coalescing handles the reads
     but not the task-launch cost of the writes. The conf is restored on
     exit; only the driver-side loop body (which is where every
     per-round materialization executes) sees the scoped value."""

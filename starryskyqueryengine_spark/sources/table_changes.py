@@ -26,7 +26,6 @@ unescaped from the on-disk directory form.
 
 from __future__ import annotations
 
-import json
 import os
 from urllib.parse import unquote
 
@@ -38,30 +37,19 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StringType, StructField, StructType
 
 from ..schemas import POST_SCHEMA
-
-LOG_DIR = "_txn_log"
-DATA_DIR = "data"
-
-
-def _versions(log_path: str) -> list[int]:
-    out = []
-    for n in os.listdir(log_path):
-        if n.endswith(".json") and not n.endswith(".checkpoint.json"):
-            stem = n[: -len(".json")]
-            if stem.isdigit():
-                out.append(int(stem))
-    return sorted(out)
-
-
-def _entry(log_path: str, v: int) -> dict:
-    with open(os.path.join(log_path, f"{v:020d}.json")) as f:
-        return json.load(f)
+from ..table_format import (
+    DATA_DIR,
+    LOG_DIR,
+    log_versions,
+    partition_key_of,
+    read_log_entry,
+)
 
 
 def _table_schema(log_path: str) -> StructType:
     """Latest logged schema (no SparkSession needed — the log is JSON)."""
-    for v in reversed(_versions(log_path)):
-        s = _entry(log_path, v).get("schema")
+    for v in reversed(log_versions(log_path)):
+        s = read_log_entry(log_path, v).get("schema")
         if s is not None:
             return StructType.fromJson(s)
     return POST_SCHEMA
@@ -83,12 +71,12 @@ def _schema_version_at(
     sv = -1
     if cache and cache.get("tip") is not None and cache["tip"] <= tip:
         lo, sv = cache["tip"], cache["sv"]
-    for v in reversed(_versions(log_path)):
+    for v in reversed(log_versions(log_path)):
         if v > tip:
             continue
         if v <= lo:
             break  # everything at or below lo already answered: sv
-        if _entry(log_path, v).get("schema") is not None:
+        if read_log_entry(log_path, v).get("schema") is not None:
             sv = v
             break
     if cache is not None:
@@ -129,7 +117,7 @@ class TableChangesStreamReader(DataSourceStreamReader):
     # projects extra columns away for those on purpose).
 
     def initialOffset(self):
-        vs = _versions(self.log_path)
+        vs = log_versions(self.log_path)
         tip = vs[-1] if vs else -1
         return {
             "version": self.start_version,
@@ -139,7 +127,7 @@ class TableChangesStreamReader(DataSourceStreamReader):
         }
 
     def latestOffset(self):
-        vs = _versions(self.log_path)
+        vs = log_versions(self.log_path)
         tip = vs[-1] if vs else self.start_version
         # a batch only succeeds when every schema in range is compatible
         # with the start baseline, so advancing the carried baseline to
@@ -159,22 +147,22 @@ class TableChangesStreamReader(DataSourceStreamReader):
             # the newest schema visible now (one-time adoption)
             sv = _schema_version_at(
                 self.log_path,
-                max(_versions(self.log_path) or [-1]),
+                max(log_versions(self.log_path) or [-1]),
                 self._sv_cache,
             )
         if sv < 0:
             base = _table_schema(self.log_path)  # POST_SCHEMA fallback
         else:
-            base = StructType.fromJson(_entry(self.log_path, sv)["schema"])
+            base = StructType.fromJson(read_log_entry(self.log_path, sv)["schema"])
         return sv, {f.name: f.dataType for f in base.fields}
 
     def partitions(self, start, end):
         parts: list[_FileChange] = []
         baseline_v, base_types = self._baseline_types(start)
-        for v in _versions(self.log_path):
+        for v in log_versions(self.log_path):
             if v <= start["version"] or v > end["version"]:
                 continue
-            e = _entry(self.log_path, v)
+            e = read_log_entry(self.log_path, v)
             s = e.get("schema")
             if s is not None and v > baseline_v:
                 # A commit PAST the pinned baseline logging a schema the
@@ -202,11 +190,7 @@ class TableChangesStreamReader(DataSourceStreamReader):
             for a in e.get("add", []):
                 parts.append(_FileChange(a["path"], a["key"], "insert", v))
             for rm in e.get("remove", []):
-                key = ""
-                for seg in rm.split("/"):
-                    if seg.startswith("key="):
-                        key = seg[4:]
-                parts.append(_FileChange(rm, key, "delete", v))
+                parts.append(_FileChange(rm, partition_key_of(rm), "delete", v))
         # Spark requires >= 1 partition per planned batch (a commit with
         # neither adds nor removes, e.g. a constraint change, still
         # advances the offset) — a zero-row sentinel covers it

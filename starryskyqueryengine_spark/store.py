@@ -67,11 +67,6 @@ class PostStore:
     def read_key(self, key: str) -> DataFrame:
         return self.read(keys=[key])
 
-    def stored_uris(self, key: str) -> DataFrame:
-        """J2 build side (src/subscription.ts:172-178): URI set for a key,
-        pruned to the single `uri` column at the scan."""
-        return self.read_key(key).select("uri")
-
     def count_by_key(self) -> DataFrame:
         """A1 (src/subscription.ts:183-189)."""
         return self.read().groupBy("key").agg(F.count("*").alias("n"))
@@ -205,17 +200,6 @@ class PostStore:
             if batch is not deduped:
                 batch.unpersist()
 
-    def _overwrite_keys(self, df: DataFrame, expected_keys: list[str] | None = None) -> None:
-        """Rewrite only the key partitions present in ``df`` (dynamic
-        partition overwrite — untouched keys keep their files).
-
-        ``expected_keys`` names partitions that may legitimately end up
-        EMPTY; how that is honored is format-specific (the Parquet
-        format drops them explicitly to cover dynamic overwrite's
-        deletion blind spot; an ACID format expresses it in the same
-        transactional REPLACE)."""
-        self.fmt.overwrite_partitions(df, expected_keys=expected_keys)
-
     def apply_retention(self, limit_by_key: dict[str, int]) -> None:
         """T3/W7: evict rows beyond each key's cap, rewriting only keys
         that are actually over their cap."""
@@ -246,7 +230,7 @@ class PostStore:
             # expected_keys closes the dynamic-overwrite blind spot here
             # too: a cap that keeps ZERO rows for a key (cap 0) must
             # still rewrite (empty) that key's partition, not skip it
-            self._overwrite_keys(kept, expected_keys=over_keys)
+            self.fmt.overwrite_partitions(kept, expected_keys=over_keys)
         finally:
             kept.unpersist()
         self._heads_after(
@@ -262,7 +246,7 @@ class PostStore:
             return
         before = self._heads_before([key])
         remaining = refresh_delete(self.read_key(key), refresh, key)
-        self._overwrite_keys(remaining, expected_keys=[key])
+        self.fmt.overwrite_partitions(remaining, expected_keys=[key])
         self._heads_after(before, lambda k, old: feed_heads.refreshed(old, refresh))
 
     def delete_rows(self, doomed: DataFrame) -> None:
@@ -279,7 +263,7 @@ class PostStore:
         keys = list(uris)
         before = self._heads_before(keys)
         remaining = self.read(keys=keys).join(doomed, ["uri", "key"], "left_anti")
-        self._overwrite_keys(remaining, expected_keys=keys)
+        self.fmt.overwrite_partitions(remaining, expected_keys=keys)
         self._heads_after(before, lambda k, old: feed_heads.without(old, uris[k]))
 
     def file_counts(self) -> dict[str, int]:
@@ -306,7 +290,7 @@ class PostStore:
         # within each partition so parquet row-group min/max stats on
         # indexedAt become selective — keyset pagination (T2) filters on
         # indexedAt and skips whole row groups in a compacted store.
-        self._overwrite_keys(
+        self.fmt.overwrite_partitions(
             affected.repartition(len(fragmented), "key")
             .sortWithinPartitions("key", F.col("indexedAt").desc(), F.col("cid").desc())
         )

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import StructType
 
 from ..store import PostStore
@@ -438,18 +439,18 @@ def cdc_apply_batch(store: PostStore):
     return apply
 
 
-def run_available_now(stream_df: DataFrame, sink_fn, checkpoint_dir: str, timeout: int = 300) -> None:
-    """W1: drain everything currently available as micro-batches, then
-    stop (the batch-catch-up analog of the reference's cron reload).
+def drain_available_now(writer: DataStreamWriter, checkpoint_dir: str, timeout: int = 300) -> None:
+    """Run a configured ``writeStream`` as an availableNow drain: every
+    micro-batch currently available, then stop.
 
     Raises TimeoutError if the backlog outlives ``timeout``: callers
     read the sink right after this returns expecting the FULL drain
     applied, so a silent partial stop would hand them incomplete
-    results (the checkpoint keeps the committed prefix — a retry with
-    a larger timeout resumes, never re-applies)."""
+    results while the still-active query keeps writing into the sink
+    (the checkpoint keeps the committed prefix — a retry with a larger
+    timeout resumes, never re-applies)."""
     q = (
-        stream_df.writeStream.foreachBatch(sink_fn)
-        .option("checkpointLocation", checkpoint_dir)
+        writer.option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
@@ -462,3 +463,13 @@ def run_available_now(stream_df: DataFrame, sink_fn, checkpoint_dir: str, timeou
             f"committed micro-batches are checkpointed at "
             f"{checkpoint_dir}; retry with a larger timeout to resume"
         )
+
+
+def run_available_now(stream_df: DataFrame, sink_fn, checkpoint_dir: str, timeout: int = 300) -> None:
+    """W1: drain everything currently available through the
+    ``foreachBatch`` hook ``sink_fn``, then stop (the batch-catch-up
+    analog of the reference's cron reload); see
+    :func:`drain_available_now` for the timeout contract."""
+    drain_available_now(
+        stream_df.writeStream.foreachBatch(sink_fn), checkpoint_dir, timeout
+    )

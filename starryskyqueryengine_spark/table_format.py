@@ -87,6 +87,45 @@ def unescape_partition_value(v: str) -> str:
     return unquote(v)
 
 
+# TxnLogFormat's on-disk layout: data files under ``data/key=<k>/`` and
+# one JSON commit per version at ``_txn_log/<version:020d>.json``. The
+# helpers below are its one reader, shared by TxnLogFormat and the
+# change-feed stream source (sources/table_changes.py).
+LOG_DIR = "_txn_log"
+DATA_DIR = "data"
+
+
+def log_versions(log_path: str) -> list[int]:
+    """The committed versions in a transaction log directory, ascending."""
+    out = []
+    for n in os.listdir(log_path):
+        if n.endswith(".json") and not n.endswith(".checkpoint.json"):
+            stem = n[: -len(".json")]
+            if stem.isdigit():
+                out.append(int(stem))
+    return sorted(out)
+
+
+def log_entry_path(log_path: str, v: int) -> str:
+    return os.path.join(log_path, f"{v:020d}.json")
+
+
+def read_log_entry(log_path: str, v: int) -> dict:
+    import json
+
+    with open(log_entry_path(log_path, v)) as f:
+        return json.load(f)
+
+
+def partition_key_of(rel_path: str) -> str:
+    """The on-disk (escaped) key of a data file path relative to
+    ``data/``, or "" when it has no ``key=`` segment."""
+    for seg in rel_path.split("/"):
+        if seg.startswith("key="):
+            return seg[4:]
+    return ""
+
+
 class TableFormat:
     """Abstract physical table adapter (see module docstring)."""
 
@@ -351,8 +390,8 @@ class TxnLogFormat(TableFormat):
     metadata op per micro-batch regardless of data volume.
     """
 
-    LOG_DIR = "_txn_log"
-    DATA_DIR = "data"
+    LOG_DIR = LOG_DIR
+    DATA_DIR = DATA_DIR
 
     def __init__(
         self,
@@ -376,13 +415,7 @@ class TxnLogFormat(TableFormat):
     # ---------------------------------------------------------- log I/O
 
     def _versions(self) -> list[int]:
-        out = []
-        for n in os.listdir(self.log_path):
-            if n.endswith(".json") and not n.endswith(".checkpoint.json"):
-                stem = n[: -len(".json")]
-                if stem.isdigit():
-                    out.append(int(stem))
-        return sorted(out)
+        return log_versions(self.log_path)
 
     def _checkpoints(self) -> list[int]:
         return sorted(
@@ -393,13 +426,10 @@ class TxnLogFormat(TableFormat):
         )
 
     def _entry_path(self, v: int) -> str:
-        return os.path.join(self.log_path, f"{v:020d}.json")
+        return log_entry_path(self.log_path, v)
 
     def _read_entry(self, v: int) -> dict:
-        import json
-
-        with open(self._entry_path(v)) as f:
-            return json.load(f)
+        return read_log_entry(self.log_path, v)
 
     def _replay(
         self, version: int | None = None
@@ -549,7 +579,7 @@ class TxnLogFormat(TableFormat):
                 # on-disk contract and the netting algebra must hold
                 # for any valid log.
                 if rm in base:
-                    removed[rm] = self._key_of(rm)
+                    removed[rm] = partition_key_of(rm)
             for a in e.get("add", []):
                 added[a["path"]] = a["key"]
         return added, removed
@@ -585,7 +615,7 @@ class TxnLogFormat(TableFormat):
         my_keys = (
             {a["key"] for a in adds}
             | (remove_keys or set())
-            | {self._key_of(p) for p in (extra_removes or [])}
+            | {partition_key_of(p) for p in (extra_removes or [])}
         )
         # normalize the schema to log ONCE (every field nullable, as the
         # link path does) so the conflict scan can compare it against an
@@ -646,7 +676,7 @@ class TxnLogFormat(TableFormat):
                                 pass
                         return iv
                 other_keys = {a["key"] for a in other.get("add", [])} | {
-                    self._key_of(p) for p in other.get("remove", [])
+                    partition_key_of(p) for p in other.get("remove", [])
                 }
                 if op != "append" and (other_keys & my_keys):
                     raise ConcurrentWriteError(
@@ -737,13 +767,6 @@ class TxnLogFormat(TableFormat):
         raise ConcurrentWriteError(
             f"gave up after {self.max_commit_retries} commit attempts"
         )
-
-    @staticmethod
-    def _key_of(rel_path: str) -> str:
-        for seg in rel_path.split("/"):
-            if seg.startswith("key="):
-                return seg[4:]
-        return ""
 
     def _maybe_checkpoint(self, v: int) -> None:
         import json

@@ -8,6 +8,9 @@ mismatch here is much cheaper than waiting for CORRECTNESS_r{N}.json.
 
 from __future__ import annotations
 
+import tempfile
+import time
+
 import duckdb
 import pytest
 
@@ -57,11 +60,26 @@ def test_oracle_types_match_spark(spark, duck, name):
 
 
 @pytest.mark.parametrize("name", QUERY_NAMES)
-def test_query_matches_oracle(spark, duck, name):
+def test_query_matches_oracle(spark, duck, name, tmp_path, monkeypatch):
     fn = entrymod.queries()[name]
-    sdf = fn(spark, SF_DIR)
-    spark_rows = [tuple(r) for r in sdf.collect()]
+    # a streaming or ACID query works inside one scratch directory under
+    # the temp dir: it must remove it, and drop its sink view, before it
+    # returns, so the result reads from neither
+    scoped = fn.__module__.endswith(".catalog_stream")
+    views = {t.name for t in spark.catalog.listTables()}
+    with monkeypatch.context() as m:
+        if scoped:
+            m.setattr(tempfile, "tempdir", str(tmp_path))
+        sdf = fn(spark, SF_DIR)
+        spark_rows = [tuple(r) for r in sdf.collect()]
     spark_cols = sdf.columns
+    if scoped:
+        # state-store maintenance runs in the background: look twice
+        for _ in range(2):
+            assert list(tmp_path.iterdir()) == [], f"{name}: left {list(tmp_path.iterdir())}"
+            new_views = {t.name for t in spark.catalog.listTables()} - views
+            assert not new_views, f"{name}: left views {new_views}"
+            time.sleep(1)
 
     res = duck.execute(entrymod.oracle_sql()[name])
     duck_cols = [d[0] for d in res.description]

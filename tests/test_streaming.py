@@ -1289,16 +1289,37 @@ def test_w6_cdc_missing_indexed_at_raises_contract_error(spark, tmp_path):
         apply_fn(bad, 0)
 
 
-def test_sentinel_fast_path_unsupported_source_returns_false(tmp_path):
-    """An exception BEFORE any sentinel is written (e.g. a directory-shaped
-    events dataset, which pq.ParquetFile rejects) must return False cleanly
-    so the caller falls back to the Spark path — r15 regression: the
-    cleanup loop referenced `written` before assignment on that path."""
-    from starryskyqueryengine_spark.catalog_stream import _write_sentinels_pyarrow
+def test_outer_join_sentinels_same_for_file_and_directory_layout(tmp_path):
+    """w_stream_outer_join's watermark sentinels come from the footer
+    statistics of either events layout: a directory of part files (as
+    tools/make_scale_fixture.py writes) stages every part and yields the
+    same sentinel rows as the single file; another column layout raises."""
+    import pyarrow.parquet as pq
+    import pytest as _pytest
 
-    src = tmp_path / "events.parquet"
-    src.mkdir()  # directory, not a parquet file
-    stage = tmp_path / "stage"
-    stage.mkdir()
-    assert _write_sentinels_pyarrow(str(stage), str(src), 10**9) is False
-    assert list(stage.iterdir()) == []  # nothing partially written
+    from starryskyqueryengine_spark.catalog_stream import _stage_events_with_sentinels
+    from tests.conftest import SF_SMALL
+
+    src = f"{SF_SMALL}/events.parquet"
+    parts = tmp_path / "events.parquet"
+    parts.mkdir()
+    t = pq.read_table(src).sort_by("event_id")
+    n = t.num_rows
+    for i in range(3):
+        pq.write_table(t.slice(i * n // 3, (i + 1) * n // 3 - i * n // 3),
+                       parts / f"part-{i:02d}.parquet")
+
+    def sentinels(stage):
+        return [pq.read_table(stage / f"z_sentinel_{i}.parquet").to_pylist()
+                for i in range(2)]
+
+    _stage_events_with_sentinels(str(tmp_path / "a"), src, 10**9)
+    _stage_events_with_sentinels(str(tmp_path / "b"), str(parts), 10**9)
+    assert sentinels(tmp_path / "b") == sentinels(tmp_path / "a")
+    assert sentinels(tmp_path / "a")[1][0]["event_type"] == "purchase"
+    assert len(list((tmp_path / "b").glob("a_*.parquet"))) == 3
+
+    odd = tmp_path / "odd.parquet"
+    pq.write_table(t.drop(["props"]), odd)
+    with _pytest.raises(ValueError, match="columns"):
+        _stage_events_with_sentinels(str(tmp_path / "c"), str(odd), 10**9)

@@ -63,7 +63,7 @@ HEADLINERS = {
     "q20_excess_supply": "part filter and dominant-supplier membership as LeftSemi joins; one (suppkey,partkey) shuffle shared by both aggregates",
     "zorder_skipping_scan": "Morton-code layout: the scan's file list comes from the min/max manifest — 5 of 16 files for the 2-D box",
     "ann_ivf_indexed_topk": "lists scan with PartitionFilters on cell; no base-side MapInPandas (compare ann_ivf_fixed_topk)",
-    "bm25_indexed_search": "probe of the incremental BM25 index (Bm25IncrementalIndex): postings scan with PartitionFilters on term_bucket; NO query-time tokenization (compare bm25_search)",
+    "bm25_indexed_search": "probe of the incremental BM25 index (Bm25IncrementalIndex): ONE postings scan with PartitionFilters on term_bucket, df a window count over it; NO query-time tokenization (compare bm25_search)",
     "html_extract_text": "every strip/unescape pass a codegen regexp_replace riding the scan; zero exchanges",
     "mm_jpeg_roundtrip": "two Arrow-batched mapInPandas hops (encode/decode), zero shuffle; JVM never touches pixel bytes",
     "s1_datasource_scan": "Python DataSource scan: 4 input partitions = 4 concurrent executor-side page windows, zero driver rows",
